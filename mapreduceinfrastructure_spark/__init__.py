@@ -19,4 +19,15 @@ Layout:
     streaming     Structured Streaming variants (sessionization, windows)
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+# Inside a Spark task (an executor's Python worker, which has always
+# imported pyspark) make per-task zip-cache invalidation lazy; see
+# session.install_lazy_zip_invalidation.  Driver processes are untouched.
+_pyspark = _sys.modules.get("pyspark")
+if _pyspark is not None and _pyspark.TaskContext.get() is not None:
+    from .session import install_lazy_zip_invalidation
+
+    install_lazy_zip_invalidation()

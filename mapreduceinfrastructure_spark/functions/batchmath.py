@@ -20,11 +20,24 @@ never engine-stable (the Lloyd re-centering means — each engine's own
 float avg under the round-6 output contract, see `_pq_train_flat`)
 are allowed to re-associate.
 
-Every public factory returns a closure fit for ``mapInPandas``; the
-closures reference only numpy + bound locals, so they cloudpickle by
-value and need nothing importable on the executors beyond numpy.
-Callers should still ``ensure_package_on_executors`` once per session
-(the mapreduce.py convention) so foreign-cwd sessions behave.
+PRECONDITION — finite, non-zero-norm inputs.  Bit-identity holds only
+for finite vectors (and, for the cosine kernel, non-zero norms), and
+the kernels do not check this per batch.  Outside it the two engines
+part ways: np.argmin returns the FIRST NaN's index where the JVM's
+``array_min`` treats NaN as larger than every number; np.lexsort sorts
+NaN after every number in both the d2 (ascending) and negated-sim
+(descending) selections, while a JVM ``ORDER BY sim DESC`` puts NaN
+first; and a zero-norm row gets a silent 0/0 = NaN cosine from
+``cosine_topk_partials_fn`` (pinned in tests/test_batchmath.py) where
+``cosine_similarity_expr`` raises DIVIDE_BY_ZERO under ANSI.
+
+Every public factory returns a closure fit for ``mapInPandas``.  The
+closures reference this module's helpers (``_stack`` and the fold
+replays), which cloudpickle by reference: unpickling imports this
+package on the worker — installing the lazy zip-cache invalidation
+there (session.install_lazy_zip_invalidation) — so callers must
+``ensure_package_on_executors`` once per session for foreign-cwd
+drivers.
 """
 
 from __future__ import annotations
@@ -381,27 +394,5 @@ def pq_train_report_partials_fn(seed_flat, trained_flat, n_codes: int, n_sub: in
                     )
                 )
             yield pd.concat(frames, ignore_index=True)
-
-    return fn
-
-
-def pair_dot_fn(dim: int, acol: str = "va", bcol: str = "vb", passthrough: tuple[str, ...] = ("da", "db")):
-    """mapInPandas closure for candidate-pair verify stages:
-    (passthrough..., va, vb, ...) -> (passthrough..., dot double) —
-    the `dot_expr` zip_with + aggregate fold replayed order-exactly
-    (acc <- acc + x_j * y_j, sequential over j)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = _stack(pdf[acol])
-            B = _stack(pdf[bcol])
-            acc = np.zeros(len(pdf), dtype=np.float64)
-            for j in range(dim):
-                acc += A[:, j] * B[:, j]
-            out = {name: pdf[name].to_numpy() for name in passthrough}
-            out["dot"] = acc
-            yield pd.DataFrame(out)
 
     return fn

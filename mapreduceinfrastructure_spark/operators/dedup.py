@@ -605,6 +605,14 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks behind a ``localCheckpoint``ed frame.
+    ``df.unpersist()`` is a no-op there: the blocks belong to the
+    checkpointed RDD under the frame's LogicalRDD, not to a cached
+    plan, so they would otherwise wait for GC to drop the frame."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Connected components over a symmetric edge table (a, b) →
     (node, label) with label = component minimum.
@@ -705,7 +713,9 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
             # time measured in scratch/r18_cc_plan_ab.py).
             new_labels = propagated.localCheckpoint(eager=False)
         cur_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels.unpersist()
+        # the agg materialized new_labels, whose lineage no longer
+        # reaches the previous round: free its blocks now, not at GC
+        _release_checkpoint(labels)
         labels = new_labels
         if cur_sum == prev_sum:
             break

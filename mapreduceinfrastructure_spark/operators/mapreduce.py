@@ -69,6 +69,20 @@ def get_tasks(user_id: str) -> tuple[MapFn, ReduceFn]:
 
 # ---------------------------------------------------------------- dataflow
 
+def _kv_frame(pairs: Iterable[tuple[str, str]]) -> pd.DataFrame:
+    """``key, value`` frame of emitted pairs.  Module-level on purpose:
+    the executor closures below reference it, so unpickling them always
+    imports this package on the worker (which installs
+    ``session.install_lazy_zip_invalidation`` there), even when the
+    user's map/reduce functions pickle by value."""
+    keys: list[str] = []
+    vals: list[str] = []
+    for k, v in pairs:
+        keys.append(k)
+        vals.append(v)
+    return pd.DataFrame({"key": keys, "value": vals})
+
+
 def map_reduce(
     df: DataFrame,
     map_fn: MapFn,
@@ -98,24 +112,12 @@ def map_reduce(
 
     def _map_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            keys: list[str] = []
-            vals: list[str] = []
-            for line in pdf[record_col]:
-                for k, v in map_fn(line):
-                    keys.append(k)
-                    vals.append(v)
-            yield pd.DataFrame({"key": keys, "value": vals})
+            yield _kv_frame(kv for line in pdf[record_col] for kv in map_fn(line))
 
     mapped = df.mapInPandas(_map_batches, schema=_KV_SCHEMA)
 
     def _reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        keys: list[str] = []
-        vals: list[str] = []
-        for k, v in reduce_fn(key, pdf["value"].tolist()):
-            keys.append(k)
-            vals.append(v)
-        return pd.DataFrame({"key": keys, "value": vals})
+        return _kv_frame(reduce_fn(pdf["key"].iloc[0], pdf["value"].tolist()))
 
     return mapped.groupBy("key").applyInPandas(_reduce_group, schema=_KV_SCHEMA)
 

@@ -260,6 +260,15 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 RESIZED_SCHEMA = "doc_id long, media binary, width int, height int"
 
 
+def _stride_sample(b: bytes, n_out: int) -> bytes:
+    """First ``n_out`` bytes of ``b`` at stride ``len(b) // n_out`` (the
+    whole payload when it already fits) — resize_media's stub resample,
+    module-level so its closure imports this package on the worker."""
+    if len(b) <= n_out:
+        return bytes(b)
+    return bytes(b[:: len(b) // n_out])[:n_out]
+
+
 def resize_media(media: DataFrame, target_w: int = 64, target_h: int = 64) -> DataFrame:
     """Resize pass over binary media — the bytes-in/bytes-out transform
     shape (same plumbing a real thumbnailer would use).
@@ -278,17 +287,10 @@ def resize_media(media: DataFrame, target_w: int = 64, target_h: int = 64) -> Da
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for b in pdf["media"]:
-                if len(b) <= n_out:
-                    out.append(bytes(b))
-                else:
-                    step = len(b) // n_out
-                    out.append(bytes(b[:: step])[:n_out])
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "media": out,
+                    "media": [_stride_sample(b, n_out) for b in pdf["media"]],
                     "width": target_w,
                     "height": target_h,
                 }

@@ -20,6 +20,7 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import warnings
@@ -226,6 +227,8 @@ def _bucket_ids_matmul(n_tables: int, bpt: int):
     """
     from pyspark.sql.functions import pandas_udf
 
+    from ..functions import batchmath as bm
+
     planes = np.asarray(_hyperplanes(n_tables * bpt), dtype=np.float64)
     weights = 1 << np.arange(bpt, dtype=np.int64)
 
@@ -233,7 +236,7 @@ def _bucket_ids_matmul(n_tables: int, bpt: int):
     def bucket_ids(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype=object)
-        m = np.vstack(v.to_numpy())  # (batch, dim)
+        m = bm._stack(v)  # (batch, dim)
         bits = (m @ planes.T > 0).astype(np.int64)
         ids = bits.reshape(len(m), n_tables, bpt) @ weights
         return pd.Series(list(ids))
@@ -505,12 +508,13 @@ def embedding_neardup_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm_expr(F.col("v")).alias("norm_b"),
     )
     # r18 negative result (banked; the VERDICT r17 item-4 experiment):
-    # routing the per-pair dot through an Arrow batch kernel
-    # (batchmath.pair_dot_fn) LOSES here — the candidate-pair frame
-    # carries both 64-double vectors per row, so the Python boundary
-    # ships ~150 MB of pair rows at sf0.1 and the round trip costs
-    # more than the interpreted fold it saves (measured 3.26 -> 3.82 s
-    # warm min, interleaved).  The fold verify stays the JVM floor.
+    # routing the per-pair dot through an Arrow batch kernel (a
+    # mapInPandas replay of the dot_expr fold) LOSES here — the
+    # candidate-pair frame carries both 64-double vectors per row, so
+    # the Python boundary ships ~150 MB of pair rows at sf0.1 and the
+    # round trip costs more than the interpreted fold it saves
+    # (measured 3.26 -> 3.82 s warm min, interleaved).  The fold
+    # verify stays the JVM floor.
     sim = dot_expr(F.col("va"), F.col("vb")) / (F.col("norm_a") * F.col("norm_b"))
     return (
         cand.join(va, "da")
@@ -2059,8 +2063,11 @@ _QUERY_SET_CACHE: dict[tuple, tuple | None] = {}
 # consumer invocation — at sf0.1 that is one extra Arrow stage per
 # query run; production builds the code index ONCE and serves it (the
 # codes ARE the index).  Keyed like _RESIDUAL_FRAME_CACHE plus the
-# codebook content hash (covers seed-vs-trained, codebook bits, and
-# the assignment mode the residual codebook already depends on).
+# codebook content digest — sha1 of its float64 bytes, so two
+# codebooks share an entry only if bit-identical (Python hash() of the
+# values collides: hash(-1.0) == hash(-2.0)).  Covers seed-vs-trained,
+# codebook bits, and the assignment mode the residual codebook already
+# depends on.
 # Payload is a non-eagerly checkpointed DataFrame handle — plan-only
 # consumers print without materializing, the first action pays the
 # encode, every later consumer reads the blocks.
@@ -2086,7 +2093,7 @@ def _codes_frame(
             fp,
             kind,
             n_codes,
-            hash(tuple(flat_vals)),
+            hashlib.sha1(np.asarray(flat_vals, dtype=np.float64).tobytes()).hexdigest(),
         )
         hit = _PQ_CODES_CACHE.get(key)
         if hit is not None:

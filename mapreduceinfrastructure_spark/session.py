@@ -10,11 +10,36 @@ runtime configuration:
 Robustness parity (SURVEY.md §2.1 rows 13-15) is configuration, not code:
 task retry subsumes worker-failure requeue (src/master.h:246-249),
 speculation subsumes the 10s straggler deadline (src/master.h:19,82-84).
+
+Fixed cost of a Python task.  Every ``mapInPandas``/``applyInPandas``
+task (the map/reduce UDFs, the ``batchmath`` kernels) starts with
+PySpark's ``setup_spark_files`` → ``importlib.invalidate_caches()``.
+Below Python 3.13 each cached zipimporter answers that by re-reading
+its archive's central directory; a reused worker holds ~16 of them,
+mostly over ``pyspark.zip`` (1328 entries), so a warm task with no
+data spent a median 198 of its 249 ms there (measured by wrapping
+``pyspark.worker.main`` on Python 3.11.7, 4 vCPUs).
+``install_lazy_zip_invalidation`` backports 3.13's lazy behavior: the
+package ``__init__`` installs it only inside a Spark task — driver
+processes keep the stock importer — and it is a no-op on 3.13+, which
+is lazy already.  Every engine ``mapInPandas``/``applyInPandas``
+closure (and the LSH bucket pandas UDF) references a module-level name
+of this package, so unpickling it on a worker imports the package and
+installs the fix there, even when the user's own map or reduce
+function pickles by value.  The two API demos that pickle wholly by
+value (``pandas_udaf_geomean``, ``udtf_chunk_text``) get it only in
+workers that already imported the package for another task.
+
+Measured on perfbench's ``curation`` workload (4 vCPUs, 10 alternating
+before/after pairs): median job_p50_s 1.441 -> 1.007 s (10/10 pairs
+faster), throughput 0.329 -> 0.413 MB/s; the JVM-only ``analytics``
+workload is flat.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -165,3 +190,34 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     )
     sc.addPyFile(zip_path)
     _SHIPPED_APPS.add(app)
+
+
+def install_lazy_zip_invalidation() -> None:
+    """Make ``zipimport.zipimporter.invalidate_caches`` lazy below
+    Python 3.13 (the CPython 3.13 behavior, backported; see the module
+    docstring for the per-task cost it removes).
+
+    The replacement re-reads an archive's directory only when its
+    ``(st_mtime_ns, st_size)`` changed since that importer last read it
+    (the first call per importer always reads), so a rewritten zip is
+    still picked up.  Idempotent; a no-op on 3.13+.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    eager = zipimport.zipimporter.invalidate_caches
+    if eager.__module__ == __name__:
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            sig = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            sig = None
+        if sig is None or sig != getattr(self, "_dir_sig", None):
+            eager(self)
+            self._dir_sig = sig
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches

@@ -519,6 +519,18 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 CUSTOM_SESSION_GAP_US = 1_800_000_000
 
 
+def _session_starts(ts, last_ts) -> int:
+    """Sessions opened by the sorted timestamps ``ts`` after a user's
+    ``last_ts`` (-1 = no state yet): the first event and every gap over
+    CUSTOM_SESSION_GAP_US.  Module-level, so the state-update closure
+    imports this package on the worker (see
+    session.install_lazy_zip_invalidation)."""
+    import numpy as np
+
+    prev = np.concatenate(([last_ts], ts[:-1]))
+    return int(((prev < 0) | ((ts - prev) > CUSTOM_SESSION_GAP_US)).sum())
+
+
 def streaming_custom_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState`` — the
     escape hatch this module's docstring names for logic the built-in
@@ -582,9 +594,7 @@ def streaming_custom_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             pdf = pdf.sort_values(["ts_us", "event_id"])
             ts = pdf["ts_us"].to_numpy()
-            prev = np.concatenate(([last_ts], ts[:-1]))
-            breaks = (prev < 0) | ((ts - prev) > CUSTOM_SESSION_GAP_US)
-            n_sessions += int(breaks.sum())
+            n_sessions += _session_starts(ts, last_ts)
             n_events += len(pdf)
             total_value += float(pdf["value"].sum())
             last_ts = ts[-1]

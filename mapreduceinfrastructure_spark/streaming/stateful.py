@@ -41,6 +41,18 @@ STATE_SCHEMA = T.StructType(
 )
 
 
+def _profile_frame(user_id, n: int, total: float, last: int) -> pd.DataFrame:
+    """One OUTPUT_SCHEMA row for a user's updated profile."""
+    return pd.DataFrame(
+        {
+            "user_id": [user_id],
+            "n_events": [n],
+            "total_value": [round(total, 2)],
+            "last_ts_us": [last],
+        }
+    )
+
+
 def streaming_user_profiles(events_raw: DataFrame) -> DataFrame:
     """Per-user stateful profile stream.
 
@@ -49,11 +61,11 @@ def streaming_user_profiles(events_raw: DataFrame) -> DataFrame:
     long Spark-side before the Arrow transfer, so the pandas state math
     is layout-independent.
 
-    The state-update function is defined inside this builder ON PURPOSE:
-    nested functions are cloudpickled by value, so executors never need
-    this package importable on their own sys.path — a module-level
-    function here breaks any driver that runs from a different cwd.
-    ``ensure_package_on_executors`` is belt-and-braces on top.
+    The state-update function is nested (cloudpickled by value); the
+    output row it yields comes from the module-level ``_profile_frame``,
+    so unpickling imports this package on the worker, and
+    ``ensure_package_on_executors`` makes it importable there for
+    drivers launched from any cwd.
     """
     from ..session import ensure_package_on_executors
 
@@ -78,14 +90,7 @@ def streaming_user_profiles(events_raw: DataFrame) -> DataFrame:
             total += float(pdf["value"].sum())
             last = max(last, int(pdf["ts_us"].max()))
         state.update((n, total, last))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 2)],
-                "last_ts_us": [last],
-            }
-        )
+        yield _profile_frame(key[0], n, total, last)
 
     return events_norm.groupBy("user_id").applyInPandasWithState(
         update_profile,

@@ -6,6 +6,7 @@ oracle hashes computed from the fold results.
 """
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -152,3 +153,63 @@ def test_exact_topk_partials_superset_of_global_topk(corpus, spark):
         )[:3]
         for d2, vi in order:
             assert cand[(qi, vi)] == d2
+
+
+def test_pq_codes_cache_keys_on_codebook_content(spark, sf_dir, corpus):
+    """_PQ_CODES_CACHE keys on the codebook's float64 bytes: codebooks
+    differing in one value get separate entries, even where Python's
+    hash() of the values collides (hash(-1.0) == hash(-2.0))."""
+    df, _ = corpus
+    n_codes = 4
+    flat_a = [0.5] * (n_codes * sim.EMBED_DIM)
+    flat_a[0] = -1.0
+    flat_b = list(flat_a)
+    flat_b[0] = -2.0
+    assert hash(tuple(flat_a)) == hash(tuple(flat_b))
+
+    def codes(flat):
+        return sim._codes_frame(
+            spark, sf_dir, df, flat, n_codes, ("vec_id",), "v", "cache-key-test"
+        )
+
+    before = set(sim._PQ_CODES_CACHE)
+    try:
+        fa, fb = codes(flat_a), codes(flat_b)
+        assert fa is not fb
+        assert len(set(sim._PQ_CODES_CACHE) - before) == 2
+        assert codes(flat_a) is fa  # a bit-identical codebook hits
+    finally:
+        for k in set(sim._PQ_CODES_CACHE) - before:
+            del sim._PQ_CODES_CACHE[k]
+
+
+def test_cosine_topk_zero_norm_row():
+    """Pins the kernel on a zero-norm corpus row (outside the module's
+    finite, non-zero-norm precondition): its sim is 0/0 = NaN, and
+    np.lexsort orders NaN after every number, so the row never enters
+    a batch's top-k while more than topk candidates remain; a batch
+    with <= topk candidates emits every row unsorted, NaN included."""
+    pdf = pd.DataFrame(
+        {
+            "vec_id": np.arange(5, dtype=np.int64),
+            "v": [
+                np.array([1.0, 0.0, 0.0]),  # the query itself
+                np.array([0.0, 0.0, 0.0]),  # zero norm
+                np.array([1.0, 1.0, 0.0]),
+                np.array([-1.0, 0.0, 0.0]),
+                np.array([0.0, 1.0, 0.0]),
+            ],
+        }
+    )
+
+    def top(k):
+        fn = bm.cosine_topk_partials_fn([0], [[1.0, 0.0, 0.0]], k)
+        with np.errstate(invalid="ignore"):
+            (out,) = fn(iter([pdf]))
+        return out
+
+    assert top(2)["neighbor_id"].tolist() == [2, 4]
+    assert top(3)["neighbor_id"].tolist() == [2, 4, 3]
+    everything = top(4)
+    assert everything["neighbor_id"].tolist() == [1, 2, 3, 4]
+    assert np.isnan(everything["sim"].iloc[0])

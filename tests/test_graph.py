@@ -46,6 +46,37 @@ def test_connected_components_deep_chain(spark):
     assert {r["label"] for r in labels} == {0}  # one component, min label
 
 
+def test_connected_components_releases_round_checkpoints(spark):
+    """Each round's labels are a localCheckpoint whose blocks
+    ``unpersist()`` cannot free; the loop releases the previous round's
+    blocks itself, so after a multi-round run (pre-jump and jumping
+    rounds both) only the returned labels stay in block storage."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from mapreduceinfrastructure_spark.operators.dedup import connected_components
+
+    def stored() -> set[int]:
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+    before = stored()
+    n = 40
+    fwd = spark.range(n - 1).select(
+        F.col("id").alias("a"), (F.col("id") + 1).alias("b")
+    )
+    edges = fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    labels = connected_components(edges)
+    assert {r["label"] for r in labels.collect()} == {0}
+    # releases are asynchronous: wait for them to land
+    deadline = time.time() + 10
+    while len(stored() - before) > 1 and time.time() < deadline:
+        time.sleep(0.2)
+    kept = stored() - before
+    assert kept == {labels._jdf.queryExecution().analyzed().rdd().id()}
+
+
 def test_triangle_degree_orientation_same_result(spark, sf_dir):
     """triangle_count now defaults to degree-ordered orientation (the
     100 TB refinement); prove it enumerates the same triangle set as
