@@ -12,23 +12,24 @@ newline-delimited text.  This module reproduces that surface:
 
 Execution maps onto Spark primitives:
     map + emit        -> mapInPandas (Arrow-batched; 1 line -> N pairs)
-    hash(key) % R     -> repartition(R, "key")  (shuffle; reference:
-                         src/mr_tasks.h:48)
+    hash(key) % R     -> repartition(R, "key")  (the job's one shuffle;
+                         reference: src/mr_tasks.h:48)
     phase barrier     -> the shuffle stage boundary (reference:
                          src/master.h:259-268)
-    group + sort +    -> groupBy("key").applyInPandas (reference holds
-    reduce               each reducer's groups in a std::map,
-                         src/worker.h:92-106; applyInPandas likewise
-                         materializes one group per call — prefer the
-                         algebraic operators in ``relational``/
-                         ``text_analysis`` when the reduce is expressible)
+    group + sort +    -> sortWithinPartitions("key", "value") +
+    reduce               mapInPandas streaming each reducer partition's
+                         sorted key runs, one reduce call per key in
+                         key order (reference: the per-reducer std::map,
+                         src/worker.h:92-106)
+    reducer r writes  -> the sink writes partition r in place as
+    file r               {user_id}_result_{r} (src/mr_tasks.h:66-78)
     scheduling, RPC,  -> Spark DAG scheduler / task retry / speculation
     stragglers           (configured in session.py; reference:
                          src/master.h:217-256)
 
 Scale note: arbitrary Python reduce is the slow path by design (the
 reference has the same property — reduce sees all values of a key in
-memory).  The engine's algebraic operators cover every OSDI'04 pattern
+memory; here that is the only bound, the sort spills).  The engine's algebraic operators cover every OSDI'04 pattern
 without Python; this layer exists for API parity and for genuinely
 custom reduce logic.
 """
@@ -37,6 +38,8 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
+from itertools import groupby
+from operator import itemgetter
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -83,24 +86,55 @@ def _kv_frame(pairs: Iterable[tuple[str, str]]) -> pd.DataFrame:
     return pd.DataFrame({"key": keys, "value": vals})
 
 
+# "no current key": a sentinel, not None, so that a None key is grouped too
+_NO_KEY = object()
+
+
+def _reduce_sorted_runs(
+    batches: Iterator[pd.DataFrame], reduce_fn: ReduceFn
+) -> Iterator[pd.DataFrame]:
+    """Stream a key-sorted partition's Arrow batches through
+    ``reduce_fn``: one call per key, in key order, with all of the key's
+    values.  A key's run may continue into the next batch (a hot key can
+    span many), so the open run is carried over and reduced only when
+    the next key starts or the partition ends.  Memory is one key's
+    value list plus one batch's output."""
+    key, values = _NO_KEY, []
+    for pdf in batches:
+        out: list[tuple[str, str]] = []
+        rows = zip(pdf["key"].tolist(), pdf["value"].tolist())
+        for k, run in groupby(rows, key=itemgetter(0)):
+            if k != key:
+                if key is not _NO_KEY:
+                    out.extend(reduce_fn(key, values))
+                key, values = k, []
+            values.extend(v for _, v in run)
+        if out:
+            yield _kv_frame(out)
+    if key is not _NO_KEY:
+        yield _kv_frame(reduce_fn(key, values))
+
+
 def map_reduce(
     df: DataFrame,
     map_fn: MapFn,
     reduce_fn: ReduceFn,
-    num_partitions: int = 8,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """Two-phase MapReduce over a single-string-column DataFrame.
 
     ``df``'s first column is the record (the reference's newline-
     delimited line, description.md:44).  Returns DataFrame[key, value].
 
-    The hash(key) % R partitioner (reference: src/mr_tasks.h:48) is the
-    shuffle ``groupBy("key").applyInPandas`` itself plans — it hashes
-    on key into ``spark.sql.shuffle.partitions``; an explicit
-    ``repartition(R, key)`` in front of it would be a second, wasted
-    shuffle.  The R-file output contract (``n_output_files``) is owned
-    by the text sink, which repartitions to exactly R on write.
-    ``num_partitions`` is kept for API parity with the reference spec.
+    One shuffle, as in the reference: the mapped pairs are hashed on key
+    into ``num_partitions`` reducer partitions (the reference's R and
+    its hash(key) % R, src/mr_tasks.h:48), sorted within each partition
+    on (key, value), and each partition is reduced as a stream of key
+    runs.  Sorting on value too gives every reduce call the same value
+    order on every run and every retry.  Partition r of the result is
+    reducer r's output, sorted by key, so ``run_job`` writes it in place
+    as file r.  ``num_partitions=None`` hashes into the session's
+    shuffle width, which AQE may coalesce.
     """
     from ..session import ensure_package_on_executors
 
@@ -114,12 +148,18 @@ def map_reduce(
         for pdf in batches:
             yield _kv_frame(kv for line in pdf[record_col] for kv in map_fn(line))
 
+    def _reduce_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return _reduce_sorted_runs(batches, reduce_fn)
+
     mapped = df.mapInPandas(_map_batches, schema=_KV_SCHEMA)
-
-    def _reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _kv_frame(reduce_fn(pdf["key"].iloc[0], pdf["value"].tolist()))
-
-    return mapped.groupBy("key").applyInPandas(_reduce_group, schema=_KV_SCHEMA)
+    by_key = (
+        mapped.repartition("key")
+        if num_partitions is None
+        else mapped.repartition(num_partitions, "key")
+    )
+    return by_key.sortWithinPartitions("key", "value").mapInPandas(
+        _reduce_batches, schema=_KV_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------- job spec
@@ -183,9 +223,13 @@ def run_job(spark: SparkSession, spec: JobSpec) -> DataFrame:
     mapreduce.h:8-20): read + validate spec, scan inputs, run the
     registered map/reduce, write sorted partitioned text output.
 
+    The job has one shuffle: ``map_reduce`` hashes into
+    ``spec.n_output_files`` reducer partitions and reducer r's partition
+    is written in place as ``{user_id}_result_{r}``.
+
     Returns the result DataFrame (also materialized to
     ``spec.output_dir``)."""
-    from ..sinks.textsink import write_sorted_kv_text
+    from ..sinks.textsink import write_partition_files
     from ..sources.text import read_text_lines
 
     if not validate_spec(spec):
@@ -202,7 +246,7 @@ def run_job(spark: SparkSession, spec: JobSpec) -> DataFrame:
         result = map_reduce(
             lines, map_fn, reduce_fn, num_partitions=spec.n_output_files
         )
-        write_sorted_kv_text(
+        write_partition_files(
             result, spec.output_dir, spec.n_output_files, user_id=spec.user_id
         )
     finally:
@@ -246,7 +290,7 @@ def word_count_mr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select(F.col("text"))
     map_fn, reduce_fn = get_tasks("wordcount")
-    kv = map_reduce(docs, map_fn, reduce_fn, num_partitions=8)
+    kv = map_reduce(docs, map_fn, reduce_fn)
     return kv.select(F.col("key").alias("word"), F.col("value").cast("long").alias("cnt"))
 
 
@@ -294,7 +338,7 @@ def grep_mr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     map_fn, reduce_fn = get_tasks("grep")
-    kv = map_reduce(docs, map_fn, reduce_fn, num_partitions=8)
+    kv = map_reduce(docs, map_fn, reduce_fn)
     return kv.select(
         F.col("key").cast("long").alias("doc_id"), F.col("value").alias("text")
     )
@@ -349,7 +393,7 @@ def inverted_index_mr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     map_fn, reduce_fn = get_tasks("invidx")
-    kv = map_reduce(docs, map_fn, reduce_fn, num_partitions=8)
+    kv = map_reduce(docs, map_fn, reduce_fn)
     return kv.select(
         F.col("key").alias("word"),
         F.col("value").alias("doc_ids"),

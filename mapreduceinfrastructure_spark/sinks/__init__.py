@@ -1,3 +1,3 @@
-from .textsink import write_sorted_kv_text
+from .textsink import write_partition_files, write_sorted_kv_text
 
-__all__ = ["write_sorted_kv_text"]
+__all__ = ["write_partition_files", "write_sorted_kv_text"]
