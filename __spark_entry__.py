@@ -2494,60 +2494,60 @@ def entry(spark: SparkSession) -> DataFrame:
 # TPC-H queries — 24 slots) + 1 r7 backfill (bloom_decontaminate).
 # Every windowed entry has an exact DuckDB oracle (pinned by
 # test_driver_window_is_oracle_backed).
-WINDOW_ROUND = 18  # must equal max(CORRECTNESS_r*.json) + 1 — pinned by
+WINDOW_ROUND = 19  # must equal max(CORRECTNESS_r*.json) + 1 — pinned by
 # tests/test_oracle_parity.py::test_window_round_is_fresh (VERDICT r11 #1:
 # r11 silently re-ran the r10 window; this makes a stale window a red test).
-DRIVER_WINDOW_R18 = [
+DRIVER_WINDOW_R19 = [
     "word_count",  # anchor
     "grep",  # anchor
-    "minhash_lsh_neardup",  # stale (hash changed since r13 row)
-    "cosine_topk",  # stale (hash changed since r14 row)
-    "ivf_split_plan",  # stale (hash changed since r16 row)
-    "streaming_cell_occupancy",  # stale (hash changed since r16 row)
-    "streaming_pq_ingest",  # stale (hash changed since r16 row)
-    "adc_rerank_topk",  # stale (hash changed since r17 row)
-    "ann_ivf",  # stale (hash changed since r17 row)
-    "ann_ivf_adc",  # stale (hash changed since r17 row)
-    "ann_probe_sweep",  # stale (hash changed since r17 row)
-    "ann_recall_report",  # stale (hash changed since r17 row)
-    "bm25_recall_report",  # stale (hash changed since r17 row)
-    "cc_star",  # stale (hash changed since r17 row)
-    "cluster_balanced_sample",  # stale (hash changed since r17 row)
-    "cluster_diameter",  # stale (hash changed since r17 row)
-    "dedup_clusters",  # stale (hash changed since r17 row)
-    "dedup_rate_by_threshold",  # stale (hash changed since r17 row)
-    "filtered_ann_recall_report",  # stale (hash changed since r17 row)
-    "incremental_dedup",  # stale (hash changed since r17 row)
-    "ivf_pq_adc_topk",  # stale (hash changed since r17 row)
-    "ivf_pq_probe_sweep",  # stale (hash changed since r17 row)
-    "ivf_pq_recall_report",  # stale (hash changed since r17 row)
-    "ivf_pq_rerank_recall_report",  # stale (hash changed since r17 row)
-    "ivf_pq_rerank_topk",  # stale (hash changed since r17 row)
-    "ivf_pq_residual",  # stale (hash changed since r17 row)
-    "ivf_split_apply",  # stale (hash changed since r17 row)
-    "lexical_semantic_rrf",  # stale (hash changed since r17 row)
-    "neardup_audit",  # stale (hash changed since r17 row)
-    "ngram_jaccard_neardup",  # stale (hash changed since r17 row)
-    "pq_adc_topk",  # stale (hash changed since r17 row)
-    "pq_bits_recall_report",  # stale (hash changed since r17 row)
-    "pq_quantize",  # stale (hash changed since r17 row)
-    "pq_recall_report",  # stale (hash changed since r17 row)
-    "pq_train_codebooks",  # stale (hash changed since r17 row)
-    "rerank_cap_sweep",  # stale (hash changed since r17 row)
-    "rrf_fusion",  # stale (hash changed since r17 row)
-    "source_overlap",  # stale (hash changed since r17 row)
-    "sorted_neighborhood_neardup",  # backfill (last banked r9)
-    "stratified_sample",  # backfill (last banked r9)
-    "streaming_active_users",  # backfill (last banked r9)
-    "streaming_curated_ingest",  # backfill (last banked r9)
-    "streaming_enriched_revenue",  # backfill (last banked r9)
-    "streaming_hourly_counts",  # backfill (last banked r9)
-    "streaming_ohlc",  # backfill (last banked r9)
-    "streaming_sessions",  # backfill (last banked r9)
-    "tf_idf",  # backfill (last banked r9)
-    "token_stats",  # backfill (last banked r9)
-    "trade_edges",  # backfill (last banked r9)
-    "trade_flows_2hop",  # backfill (last banked r9)
+    "dedup_clusters",  # must: materially changed (last banked r18)
+    "incremental_dedup",  # must: materially changed (last banked r18)
+    "grep_mr",  # stale (hash changed since r12 row)
+    "inverted_index_mr",  # stale (hash changed since r12 row)
+    "word_count_mr",  # stale (hash changed since r12 row)
+    "embedding_neardup",  # stale (hash changed since r12 row)
+    "embedding_neardup_strict",  # stale (hash changed since r12 row)
+    "streaming_custom_sessions",  # stale (hash changed since r12 row)
+    "ann_ivf_adc",  # stale (hash changed since r18 row)
+    "cluster_diameter",  # stale (hash changed since r18 row)
+    "ivf_pq_adc_topk",  # stale (hash changed since r18 row)
+    "ivf_pq_probe_sweep",  # stale (hash changed since r18 row)
+    "ivf_pq_recall_report",  # stale (hash changed since r18 row)
+    "ivf_pq_rerank_recall_report",  # stale (hash changed since r18 row)
+    "ivf_pq_rerank_topk",  # stale (hash changed since r18 row)
+    "rerank_cap_sweep",  # stale (hash changed since r18 row)
+    "triangle_count",  # backfill (last banked r9)
+    "weighted_median",  # backfill (last banked r9)
+    "zipf_slope",  # backfill (last banked r9)
+    "bigram_count",  # backfill (last banked r11)
+    "bpe_token_count",  # backfill (last banked r11)
+    "curation_pipeline",  # backfill (last banked r11)
+    "cusum_drift",  # backfill (last banked r11)
+    "data_mixture",  # backfill (last banked r11)
+    "decontamination",  # backfill (last banked r11)
+    "distinct_count",  # backfill (last banked r11)
+    "distributed_sort",  # backfill (last banked r11)
+    "dup_spans",  # backfill (last banked r11)
+    "event_transitions",  # backfill (last banked r11)
+    "fingerprint",  # backfill (last banked r11)
+    "frame_offsets",  # backfill (last banked r11)
+    "funnel_conversion",  # backfill (last banked r11)
+    "fuzzy_blocked_join",  # backfill (last banked r11)
+    "gap_fill",  # backfill (last banked r11)
+    "global_rank",  # backfill (last banked r11)
+    "join_anti",  # backfill (last banked r11)
+    "join_semi",  # backfill (last banked r11)
+    "keep_best_dedup",  # backfill (last banked r11)
+    "mixture_weights",  # backfill (last banked r11)
+    "neyman_allocation",  # backfill (last banked r11)
+    "pack_sequences",  # backfill (last banked r11)
+    "pivot_status",  # backfill (last banked r11)
+    "quality_score",  # backfill (last banked r11)
+    "readability",  # backfill (last banked r11)
+    "repetition_filter",  # backfill (last banked r11)
+    "retention_cohorts",  # backfill (last banked r11)
+    "rolling_fingerprint",  # backfill (last banked r11)
+    "rolling_time_window",  # backfill (last banked r11)
 ]
 
 
@@ -2562,7 +2562,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # replay, unrolled Lloyd CTE, hex-domain PCM replay); bpe_merges
     # in r11 (unrolled merge-recurrence CTE, _bpe_merges_sql).
     reg = {
-        # (registry order is historical; DRIVER_WINDOW_R18 defines the
+        # (registry order is historical; DRIVER_WINDOW_R19 defines the
         #  verified window — see the note above)
         "word_count": ta.word_count,
         "grep": ta.grep,
@@ -2839,7 +2839,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_index_ingest": es.streaming_index_ingest,
         "jsonl_roundtrip": pl.jsonl_roundtrip,
     }
-    ordered = {k: reg[k] for k in DRIVER_WINDOW_R18}
+    ordered = {k: reg[k] for k in DRIVER_WINDOW_R19}
     ordered.update((k, v) for k, v in reg.items() if k not in ordered)
     return ordered
 
