@@ -29,9 +29,9 @@ Execution maps onto Spark primitives:
 
 Scale note: arbitrary Python reduce is the slow path by design (the
 reference has the same property — reduce sees all values of a key in
-memory; here that is the only bound, the sort spills).  The engine's algebraic operators cover every OSDI'04 pattern
-without Python; this layer exists for API parity and for genuinely
-custom reduce logic.
+memory; here that is the only bound, the sort spills).  The engine's
+algebraic operators cover every OSDI'04 pattern without Python; this
+layer exists for API parity and for genuinely custom reduce logic.
 """
 
 from __future__ import annotations

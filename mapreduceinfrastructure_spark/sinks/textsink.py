@@ -59,6 +59,10 @@ def write_partition_files(
     # partition with no rows writes no part file, so name by r, not rank
     out_paths = [os.path.join(output_dir, f"{user_id}_result_{r}") for r in range(num_partitions)]
     written = {int(os.path.basename(part).split("-")[1]): part for part in parts}
+    if written and max(written) >= num_partitions:
+        raise ValueError(
+            f"partition {max(written)} written to {staging}: df has more than R={num_partitions} partitions"
+        )
     for r, dest in enumerate(out_paths):
         if r in written:
             shutil.move(written[r], dest)

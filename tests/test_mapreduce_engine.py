@@ -5,6 +5,7 @@ partitioned text output)."""
 from __future__ import annotations
 
 import os
+import re
 from collections import Counter, defaultdict
 
 import pytest
@@ -107,6 +108,16 @@ def test_sink_empty_partitions(spark, tmp_path):
     assert len(paths) == 5
     contents = [open(p).read() for p in sorted(paths)]
     assert sum(1 for c in contents if c.strip()) == 1
+
+
+def test_partition_files_refuses_more_than_r_partitions(spark, tmp_path):
+    """Partition r becomes file r, so a frame with more than R partitions
+    is an error, not silently dropped files."""
+    from mapreduceinfrastructure_spark.sinks.textsink import write_partition_files
+
+    df = spark.createDataFrame([(f"k{i}", "v") for i in range(6)], "key string, value string")
+    with pytest.raises(ValueError, match="more than R=2"):
+        write_partition_files(df.repartition(3), str(tmp_path), 2, user_id="u")
 
 
 def test_cli_main_runs_reference_config_shape(spark, tmp_path):
@@ -220,8 +231,6 @@ def test_streaming_reduce_matches_oracle(spark, small_arrow_batches, num_partiti
 def test_map_reduce_plan_has_one_exchange_and_no_group_calls(spark):
     """The reduce streams sorted runs: no per-group FlatMapGroupsInPandas
     node, and the hash partitioning is the plan's only shuffle."""
-    import re
-
     from mapreduceinfrastructure_spark.plans.explain import formatted_plan, shuffle_count
 
     df = spark.createDataFrame([("a b",)], "line string")
