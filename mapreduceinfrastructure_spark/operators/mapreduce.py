@@ -21,8 +21,10 @@ Execution maps onto Spark primitives:
                          sorted key runs, one reduce call per key in
                          key order (reference: the per-reducer std::map,
                          src/worker.h:92-106)
-    reducer r writes  -> the sink writes partition r in place as
-    file r               {user_id}_result_{r} (src/mr_tasks.h:66-78)
+    reducer r writes  -> run_job: the same task streams its reduce
+    file r               output into a per-attempt temp file and renames
+                         it to {user_id}_result_{r} (src/mr_tasks.h:
+                         66-78; OSDI'04 §3.3), no row back to the JVM
     scheduling, RPC,  -> Spark DAG scheduler / task retry / speculation
     stragglers           (configured in session.py; reference:
                          src/master.h:217-256)
@@ -38,6 +40,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
+from functools import partial
 from itertools import groupby
 from operator import itemgetter
 
@@ -115,6 +118,33 @@ def _reduce_sorted_runs(
         yield _kv_frame(reduce_fn(key, values))
 
 
+def _sorted_pairs(
+    df: DataFrame, map_fn: MapFn, num_partitions: int | None
+) -> DataFrame:
+    """The map and the job's one shuffle: ``map_fn`` over ``df``'s first
+    column, the pairs hashed on key into ``num_partitions`` reducer
+    partitions and sorted within each on (key, value)."""
+    from ..session import ensure_package_on_executors
+
+    # user map/reduce fns may be module-level (pickled by reference) —
+    # ship the package so executor workers can resolve them regardless
+    # of the driver process's cwd/PYTHONPATH.
+    ensure_package_on_executors(df.sparkSession)
+    record_col = df.columns[0]
+
+    def _map_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _kv_frame(kv for line in pdf[record_col] for kv in map_fn(line))
+
+    mapped = df.mapInPandas(_map_batches, schema=_KV_SCHEMA)
+    by_key = (
+        mapped.repartition("key")
+        if num_partitions is None
+        else mapped.repartition(num_partitions, "key")
+    )
+    return by_key.sortWithinPartitions("key", "value")
+
+
 def map_reduce(
     df: DataFrame,
     map_fn: MapFn,
@@ -132,33 +162,11 @@ def map_reduce(
     on (key, value), and each partition is reduced as a stream of key
     runs.  Sorting on value too gives every reduce call the same value
     order on every run and every retry.  Partition r of the result is
-    reducer r's output, sorted by key, so ``run_job`` writes it in place
-    as file r.  ``num_partitions=None`` hashes into the session's
-    shuffle width, which AQE may coalesce.
+    reducer r's output, in key order.  ``num_partitions=None`` hashes
+    into the session's shuffle width, which AQE may coalesce.
     """
-    from ..session import ensure_package_on_executors
-
-    # user map/reduce fns may be module-level (pickled by reference) —
-    # ship the package so executor workers can resolve them regardless
-    # of the driver process's cwd/PYTHONPATH.
-    ensure_package_on_executors(df.sparkSession)
-    record_col = df.columns[0]
-
-    def _map_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _kv_frame(kv for line in pdf[record_col] for kv in map_fn(line))
-
-    def _reduce_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _reduce_sorted_runs(batches, reduce_fn)
-
-    mapped = df.mapInPandas(_map_batches, schema=_KV_SCHEMA)
-    by_key = (
-        mapped.repartition("key")
-        if num_partitions is None
-        else mapped.repartition(num_partitions, "key")
-    )
-    return by_key.sortWithinPartitions("key", "value").mapInPandas(
-        _reduce_batches, schema=_KV_SCHEMA
+    return _sorted_pairs(df, map_fn, num_partitions).mapInPandas(
+        partial(_reduce_sorted_runs, reduce_fn=reduce_fn), schema=_KV_SCHEMA
     )
 
 
@@ -223,18 +231,21 @@ def run_job(spark: SparkSession, spec: JobSpec) -> DataFrame:
     mapreduce.h:8-20): read + validate spec, scan inputs, run the
     registered map/reduce, write sorted partitioned text output.
 
-    The job has one shuffle: ``map_reduce`` hashes into
-    ``spec.n_output_files`` reducer partitions and reducer r's partition
-    is written in place as ``{user_id}_result_{r}``.
+    The job has one shuffle and two stages: the map, then
+    ``spec.n_output_files`` reducer tasks, each of which reduces its
+    sorted key runs and writes the output itself as
+    ``{user_id}_result_{r}`` (see ``sinks.textsink``).  Within a key the
+    file keeps the order the reduce emitted, as the reference does.
 
-    Returns the result DataFrame (also materialized to
+    Returns the ``map_reduce`` result DataFrame (already materialized to
     ``spec.output_dir``)."""
-    from ..sinks.textsink import write_partition_files
+    from ..sinks.textsink import write_reducer_files
     from ..sources.text import read_text_lines
 
     if not validate_spec(spec):
         raise ValueError(f"invalid job spec: {spec}")
     map_fn, reduce_fn = get_tasks(spec.user_id)
+    reduce_runs = partial(_reduce_sorted_runs, reduce_fn=reduce_fn)
     # the shard-size knob is session conf (see read_text_lines); hold it
     # through the write action (splits are planned at action time), then
     # restore so the job doesn't leak its shard size into the session.
@@ -243,15 +254,17 @@ def run_job(spark: SparkSession, spec: JobSpec) -> DataFrame:
         lines = read_text_lines(
             spark, spec.input_files, shard_kilobytes=spec.map_kilobytes
         )
-        result = map_reduce(
-            lines, map_fn, reduce_fn, num_partitions=spec.n_output_files
-        )
-        write_partition_files(
-            result, spec.output_dir, spec.n_output_files, user_id=spec.user_id
+        pairs = _sorted_pairs(lines, map_fn, spec.n_output_files)
+        write_reducer_files(
+            pairs,
+            spec.output_dir,
+            spec.n_output_files,
+            user_id=spec.user_id,
+            reduce_runs=reduce_runs,
         )
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
-    return result
+    return pairs.mapInPandas(reduce_runs, schema=_KV_SCHEMA)
 
 
 # ----------------------------------------------------- shipped example UDFs

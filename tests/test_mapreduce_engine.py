@@ -282,3 +282,188 @@ def test_run_job_is_one_shuffle_reducer_r_writes_file_r(spark, tmp_path):
         rows = (out_dir / f"wordcount_result_{r}").read_text().splitlines()
         assert {row.split(" ", 1)[0] for row in rows} == part_keys[r]
     assert sum(len(v) for v in part_keys.values()) == 38  # w0..w36 + common
+
+
+# ------------------------------------------- reducer r writes file r itself
+
+def _model_files(spark, pairs, R):
+    """Expected bytes of each of the R files: ``pairs`` in the order the
+    reduce emits them (keys ascending, nulls first), each placed by the
+    shuffle's hash(key) % R and written as a concat_ws(" ", key, value)
+    line — a null is skipped with its separator."""
+    part = {
+        row["key"]: row["p"]
+        for row in spark.createDataFrame([(k,) for k in {k for k, _ in pairs}], "key string")
+        .select("key", F.expr(f"pmod(hash(key), {R})").alias("p"))
+        .collect()
+    }
+    files = [""] * R
+    for k, v in pairs:
+        files[part[k]] += " ".join(x for x in (k, v) if x is not None) + "\n"
+    return files
+
+
+def _python_job(user_id, lines):
+    """The registered task in plain Python: group, sort values, reduce
+    each key in key order."""
+    map_fn, reduce_fn = mr.get_tasks(user_id)
+    groups = defaultdict(list)
+    for line in lines:
+        for k, v in map_fn(line):
+            groups[k].append(v)
+    return [kv for k in sorted(groups) for kv in reduce_fn(k, sorted(groups[k]))]
+
+
+def _read_files(out_dir, user_id, R):
+    assert sorted(os.listdir(out_dir)) == sorted(f"{user_id}_result_{r}" for r in range(R))
+    return [(out_dir / f"{user_id}_result_{r}").read_bytes().decode("utf-8") for r in range(R)]
+
+
+_JOB_TEXT = [
+    "Zeta zeta é 😀 fast join here",
+    "the fast join, again. é",
+    "",
+    "z Z 😀 'quoted' \"and\" more, words.",
+    "fast join fast join",
+]
+
+
+@pytest.mark.parametrize("user_id", ["wordcount", "grep", "invidx"])
+def test_run_job_files_match_python_model(spark, tmp_path, user_id):
+    """The three registered jobs: file r is byte-equal to the sorted
+    ``key value`` lines a pure-Python run puts in reducer r, with
+    non-ASCII keys ordered as Spark sorts them."""
+    lines = _JOB_TEXT if user_id == "wordcount" else [f"{i}\t{t}" for i, t in enumerate(_JOB_TEXT * 3)]
+    inp = tmp_path / "in.txt"
+    inp.write_text("".join(f"{line}\n" for line in lines), encoding="utf-8")
+    out_dir = tmp_path / "out"
+    R = 3
+    mr.run_job(spark, mr.JobSpec(user_id, [str(inp)], str(out_dir), R))
+    want = _model_files(spark, _python_job(user_id, lines), R)
+    assert _read_files(out_dir, user_id, R) == want
+    assert sum(map(len, want)) > 0
+
+
+def test_sink_null_key_and_value_follow_concat_ws(spark, tmp_path):
+    """A null key or value is skipped with its separator; null keys sort
+    first."""
+    pairs = [(None, "v1"), (None, None), ("k", None), ("k", "a"), ("é", "x"), ("😀", "y")]
+    df = spark.createDataFrame(pairs, "key string, value string")
+    write_sorted_kv_text(df, str(tmp_path), 2, user_id="u")
+    nulls_first = sorted(pairs, key=lambda kv: [(x is not None, x or "") for x in kv])
+    assert _read_files(tmp_path, "u", 2) == _model_files(spark, nulls_first, 2)
+
+
+def test_sink_non_ascii_order_on_unpartitioned_frame(spark, tmp_path):
+    """write_sorted_kv_text on a frame not partitioned by key: the order
+    guard agrees with Spark's sort ("Z" < "z" < "é" < "😀") and raises
+    no false error."""
+    keys = ["😀", "z", "é", "Z", "a", "é", "zz", "Zé"]
+    pairs = [(k, str(i)) for i, k in enumerate(keys)]
+    df = spark.createDataFrame(pairs, "key string, value string").repartition(3)
+    for R in (1, 4):
+        out = tmp_path / f"r{R}"
+        paths = write_sorted_kv_text(df, str(out), R, user_id="u")
+        assert paths == [str(out / f"u_result_{r}") for r in range(R)]
+        assert _read_files(out, "u", R) == _model_files(spark, sorted(pairs), R)
+
+
+def test_run_job_more_files_than_keys(spark, tmp_path):
+    """R above the number of distinct keys: exactly R files, and the
+    files of reducers that got no key are empty."""
+    inp = tmp_path / "in.txt"
+    inp.write_text("b a a\nc b a\n")
+    out_dir = tmp_path / "out"
+    R = 16
+    mr.run_job(spark, mr.JobSpec("wordcount", [str(inp)], str(out_dir), R))
+    got = _read_files(out_dir, "wordcount", R)
+    assert got == _model_files(spark, [("a", "3"), ("b", "2"), ("c", "1")], R)
+    assert sum(1 for text in got if text == "") == R - 3
+
+
+def _backwards_reduce(key, values):
+    yield key, str(len(values))
+    if key == "b":
+        yield "a", "late"
+
+
+mr.register_tasks("test_backwards", mr.wordcount_map, _backwards_reduce)
+
+
+def test_reduce_emitting_smaller_key_fails_the_job(spark, tmp_path):
+    """A key below the previous one in the same file fails the job with
+    both keys named, and no staging directory is left behind."""
+    inp = tmp_path / "in.txt"
+    inp.write_text("a b c\n")
+    out_dir = tmp_path / "out"
+    with pytest.raises(Exception, match="wrote key 'a' after 'b'"):
+        mr.run_job(spark, mr.JobSpec("test_backwards", [str(inp)], str(out_dir), 1))
+    assert not [n for n in os.listdir(out_dir) if "staging" in n]
+
+
+def test_sink_refuses_uri_output_dir(spark):
+    df = spark.createDataFrame([("k", "v")], "key string, value string")
+    for uri in ("file:///tmp/out", "hdfs://nn/out", "s3a://bucket/out"):
+        with pytest.raises(ValueError, match="is a URI"):
+            write_sorted_kv_text(df, uri, 2)
+
+
+_RETRY_PROBE = r"""
+import os, sys
+
+from mapreduceinfrastructure_spark.operators import mapreduce as mr
+from mapreduceinfrastructure_spark.session import get_spark
+
+root = sys.argv[1]
+marker = os.path.join(root, "attempt0_failed")
+
+
+def faulty_reduce(key, values):
+    # reducer 0's first attempt fails on its 20th key, after earlier
+    # keys' output went to the writer; the retry runs clean
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    calls.append(key)
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0 and len(calls) == 20:
+        open(marker, "w").close()
+        raise RuntimeError("injected reducer fault")
+    yield key, str(sum(int(v) for v in values))
+
+
+calls = []
+mr.register_tasks("retry", mr.wordcount_map, faulty_reduce)
+mr.register_tasks("clean", mr.wordcount_map, mr.wordcount_reduce)
+spark = get_spark(
+    app_name="mri-retry-probe", cpus=2, shuffle_partitions=2,
+    extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "7"},
+)
+inp = os.path.join(root, "in.txt")
+with open(inp, "w") as f:
+    f.writelines(f"w{i:03d} w{i % 17:03d} w{(i * 7) % 101:03d}\n" for i in range(300))
+for user_id in ("clean", "retry"):
+    mr.run_job(spark, mr.JobSpec(user_id, [inp], os.path.join(root, user_id), 2))
+spark.stop()
+print("ok")
+"""
+
+
+def test_task_retry_leaves_the_same_files(tmp_path):
+    """With task retries on (local[2,2]), reducer 0 failing mid-output on
+    its first attempt leaves the same R files as a fault-free run and no
+    staging entries: the retry's temp file replaces the result whole."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_MASTER="local[2,2]")
+    out = subprocess.run(
+        [sys.executable, "-c", _RETRY_PROBE, str(tmp_path)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().endswith("ok")
+    assert (tmp_path / "attempt0_failed").exists()
+    clean = _read_files(tmp_path / "clean", "clean", 2)
+    assert _read_files(tmp_path / "retry", "retry", 2) == clean
+    assert all(clean)
