@@ -5932,11 +5932,14 @@ def oracle_sql() -> dict[str, str]:
         """,
         # semantics of the runtime-bloom-filter join are those of the
         # plain join — the filter is a pure optimization, which is
-        # exactly what the shared oracle proves
+        # exactly what the shared oracle proves; revenue is an exact
+        # DECIMAL sum of whole cents in both engines, so its rounding
+        # does not depend on the summation order
         "runtime_filter_join": """
             SELECT strftime(o_orderdate, '%Y-%m') AS month,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2)
-                     AS revenue,
+                   CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                     * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
+                     AS DOUBLE) AS revenue,
                    count(DISTINCT o_orderkey) AS n_orders
             FROM lineitem
             JOIN orders ON l_orderkey = o_orderkey

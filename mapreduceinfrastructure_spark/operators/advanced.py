@@ -840,12 +840,15 @@ def runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority") == "1-URGENT"
     ).select("o_orderkey", "o_orderdate")
     j = li.join(orders, li.l_orderkey == orders.o_orderkey)
+    # prices and discounts are whole cents: sum them as exact decimals,
+    # so the rounded revenue does not depend on the summation order
+    # (a double sum flips the last cent with the partition count)
+    price = F.col("l_extendedprice").cast("decimal(15,2)")
+    discount = F.col("l_discount").cast("decimal(15,2)")
     return j.groupBy(
         F.date_format("o_orderdate", "yyyy-MM").alias("month")
     ).agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue"),
+        F.round(F.sum(price * (1 - discount)), 2).cast("double").alias("revenue"),
         F.countDistinct("o_orderkey").cast("long").alias("n_orders"),
     )
 
