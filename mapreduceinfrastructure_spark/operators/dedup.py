@@ -26,7 +26,7 @@ import glob
 import os
 import random
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_expr
@@ -617,57 +617,44 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Connected components over a symmetric edge table (a, b) →
     (node, label) with label = component minimum.
 
-    Min-label propagation to fixpoint: each round, every node takes the
-    min label among itself and its neighbors (one shuffle on node id);
-    from round 3 on, pointer jumping (l(v) <- l(l(v))) collapses long
-    chains in O(log diameter) extra rounds instead of O(diameter).
+    Min-label propagation to fixpoint over an adjacency-list state
+    (node, label, nbrs).  Round 0 is the build: one groupBy("a")
+    collects each node's neighbor set (duplicate edges collapse) and
+    sets label = min(node, nbrs).  Every later round is ONE exchange:
+    each node sends a self row (node, label, nbrs, old = label) and a
+    bare (v, label) message to each neighbor v, and one groupBy on the
+    target takes the min label, keeps the self row's nbrs and old —
+    the adjacency travels with the messages, so no join.  From round 3
+    on, pointer jumping (l(v) <- l(l(v))) collapses long chains in
+    O(log diameter) extra rounds instead of O(diameter).
+
+    Each round is one eager localCheckpoint, and the convergence probe
+    rides on it as an observed count_if(label < old): 0 means no label
+    moved, the exact fixpoint (labels only decrease, and a retried
+    stage can only over-count).  Raises RuntimeError if ``max_rounds``
+    rounds (the build included) end without that fixpoint.  Partition
+    counts are left to AQE: a near-dup graph iterates in 1-task
+    stages, a billion-edge graph still shards across the cluster.
     """
-    # partition edges on the join key ONCE and keep them resident: every
-    # propagation round reuses the in-memory partitioning, so only the
-    # (much smaller) label table moves per iteration.  Materialize BEFORE
-    # deriving the label table — labels' eager checkpoint would otherwise
-    # recompute the full (possibly expensive) edge lineage a second time.
-    spark = edges.sparkSession
-    staged = edges.persist()
-    # persist-BEFORE-count: the count is the materializing action for
-    # the cache (verified via RDDStorageInfo: all partitions cached
-    # after this line), so the possibly-expensive edge pipeline runs
-    # exactly once — the repartition below reads the cached blocks,
-    # never the lineage.
-    n_edges = staged.count()
-    # size iteration stages to the graph, not the session default: a
-    # 512-edge near-dup graph iterates in 1-task stages instead of
-    # shuffle_partitions-task stages, while a billion-edge graph still
-    # shards across the cluster (same policy as graph.pagerank_nations).
-    n_parts = max(
-        1, min(spark.sparkContext.defaultParallelism, n_edges // 100_000 + 1)
-    )
-    edges = staged.repartition(n_parts, "b").persist()
-    edges.count()
-    staged.unpersist()
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .coalesce(n_parts)
-        .withColumn("label", F.col("node"))
+    state = (
+        edges.groupBy(F.col("a").alias("node"))
+        .agg(F.collect_set("b").alias("nbrs"))
+        .select("node", F.least("node", F.array_min("nbrs")).alias("label"), "nbrs")
         .localCheckpoint(eager=True)
     )
-    # convergence probe: min-propagation only ever LOWERS labels, so
-    # sum(label) strictly decreases until the fixpoint — one cheap agg
-    # over the already-materialized label table replaces a join-based
-    # old-vs-new comparison (halves the per-round job count).
-    prev_sum = None
-    for round_no in range(max_rounds):  # see pointer jumping below
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("label").alias("nbr_label"))
+    for round_no in range(1, max_rounds):
+        # one row per (target, sender); only the self row keeps nbrs/old
+        msgs = state.select(
+            F.explode(F.concat(F.array("node"), "nbrs")).alias("node"),
+            F.col("node").alias("src"),
+            "label",
+            "nbrs",
         )
-        propagated = labels.join(neighbor_min, "node", "left").select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
+        is_self = F.col("node") == F.col("src")
+        nxt = msgs.groupBy("node").agg(
+            F.min("label").alias("label"),
+            F.first(F.when(is_self, F.col("nbrs")), ignorenulls=True).alias("nbrs"),
+            F.max(F.when(is_self, F.col("label"))).alias("old"),
         )
         # pointer jumping: l(v) <- l(l(v)).  Labels stay within the
         # component and only decrease, so the fixpoint is unchanged, but
@@ -677,51 +664,31 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
         # the extra self-join), while a graph still moving after three
         # rounds has deep chains — exactly when jumping pays.
         if round_no >= 3:
-            parent = propagated.select(
+            parent = nxt.select(
                 F.col("node").alias("p_node"), F.col("label").alias("p_label")
             )
-            propagated = (
-                propagated.join(parent, propagated.label == parent.p_node, "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
-                    ).alias("label"),
-                )
+            nxt = nxt.join(parent, nxt.label == parent.p_node, "left").select(
+                "node",
+                F.least("label", F.coalesce("p_label", "label")).alias("label"),
+                "nbrs",
+                "old",
             )
-        if round_no >= 3:
-            # the jump self-join references the round's plan twice, so
-            # without HARD lineage truncation the lazy plan (and the
-            # per-round cost) compounds ~3x per round — measured
-            # runaway on a 200-node chain.  localCheckpoint bounds
-            # every jumping round to the same constant-size plan.
-            # LAZY since r17 (guide job-cadence): the checkpoint
-            # rebases the plan on an RDD immediately either way; the
-            # convergence agg below is the round's materializing
-            # action, so the eager form's dedicated checkpoint job was
-            # a second per-round driver job for the same blocks.
-            new_labels = propagated.localCheckpoint(eager=False)
-        else:
-            # pre-jump rounds: LAZY localCheckpoint too (r18, VERDICT
-            # r17 #6).  The r8 comment chose persist because the only
-            # checkpoint then available was EAGER (two actions/round);
-            # the lazy form has the same one-action-per-round cadence
-            # — the convergence agg materializes it — and additionally
-            # truncates lineage, so the persisted pre-jump rounds no
-            # longer compound into the final plan (dedup_clusters'
-            # analyzed plan: 149k -> 38k chars at sf0.01, catalyst
-            # time measured in scratch/r18_cc_plan_ab.py).
-            new_labels = propagated.localCheckpoint(eager=False)
-        cur_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        # the agg materialized new_labels, whose lineage no longer
-        # reaches the previous round: free its blocks now, not at GC
-        _release_checkpoint(labels)
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    return labels
+        moved = Observation()
+        new_state = (
+            nxt.observe(moved, F.count_if(F.col("label") < F.col("old")).alias("n"))
+            .select("node", "label", "nbrs")
+            .localCheckpoint(eager=True)
+        )
+        # new_state is materialized and its lineage no longer reaches
+        # the previous round: free those blocks now, not at GC
+        _release_checkpoint(state)
+        state = new_state
+        if moved.get["n"] == 0:
+            return state.select("node", "label")
+    _release_checkpoint(state)
+    raise RuntimeError(
+        f"connected_components: labels still moving after max_rounds={max_rounds}"
+    )
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -745,11 +712,14 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = neardup_pairs(
         spark, sf_dir, threshold=0.5, df_cap=HOT_SHINGLE_DF_CAP
     )
-    edges = (
-        pairs.select(F.col("da").alias("a"), F.col("db").alias("b"))
-        .union(pairs.select(F.col("db").alias("a"), F.col("da").alias("b")))
-        .distinct()
-    )
+    edges = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("da").alias("a"), F.col("db").alias("b")),
+                F.struct(F.col("db").alias("a"), F.col("da").alias("b")),
+            )
+        ).alias("e")
+    ).select("e.*")
     return connected_components(edges).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )

@@ -491,8 +491,8 @@ def star_contraction(edges: DataFrame, max_rounds: int = STAR_MAX_ROUNDS) -> Dat
     Both operations preserve connectivity and only ever lower the
     smaller endpoint of any edge (proofs in the paper); the fixpoint
     is a star forest rooted at each component's minimum node.  The
-    convergence probe is the same trick connected_components uses:
-    Σ(min endpoint) strictly decreases until fixpoint, so one
+    convergence probe: Σ(min endpoint) strictly decreases until
+    fixpoint, so one
     (count, sum, sum) agg over the canonical edge table replaces an
     edge-set equality join.
 
@@ -507,7 +507,7 @@ def star_contraction(edges: DataFrame, max_rounds: int = STAR_MAX_ROUNDS) -> Dat
     shrinks toward |V| as chains contract; per-round localCheckpoint
     truncates the iterative lineage; partition count follows the edge
     volume (1-task stages on metadata-sized dedup graphs, sharded at
-    cluster scale — the connected_components policy).
+    cluster scale).
     """
     spark = edges.sparkSession
     staged = edges.persist()

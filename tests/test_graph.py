@@ -3,6 +3,8 @@ mathematical properties instead of a cross-engine hash)."""
 
 from __future__ import annotations
 
+import pytest
+
 from mapreduceinfrastructure_spark.operators.graph import pagerank_nations, trade_edges
 
 
@@ -74,7 +76,69 @@ def test_connected_components_releases_round_checkpoints(spark):
     while len(stored() - before) > 1 and time.time() < deadline:
         time.sleep(0.2)
     kept = stored() - before
-    assert kept == {labels._jdf.queryExecution().analyzed().rdd().id()}
+    # the labels are a projection of the checkpointed round state, so
+    # look through it to the LogicalRDD leaf
+    leaf = labels._jdf.queryExecution().analyzed().collectLeaves().head()
+    assert kept == {leaf.rdd().id()}
+
+
+def _path_edges(spark, n):
+    """Symmetric edges of the path 0 - 1 - ... - n-1."""
+    from pyspark.sql import functions as F
+
+    fwd = spark.range(n - 1).select(
+        F.col("id").alias("a"), (F.col("id") + 1).alias("b")
+    )
+    return fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_raises_when_rounds_run_out(spark):
+    """A 40-node path needs far more than two rounds: returning its
+    unconverged labels (38 distinct for one component) would be a
+    silent wrong answer, so exhausting max_rounds must raise."""
+    from mapreduceinfrastructure_spark.operators.dedup import connected_components
+
+    with pytest.raises(RuntimeError, match="max_rounds=2"):
+        connected_components(_path_edges(spark, 40), max_rounds=2).collect()
+
+
+def test_connected_components_job_cadence(spark, sf_dir):
+    """Each propagation round is one exchange and one eager checkpoint
+    carrying the convergence probe, so it costs at most two jobs (the
+    AQE map stage and the checkpoint): a path of k + 1 nodes (k <= 2,
+    before pointer jumping) needs k rounds after the build, the last
+    one confirming the fixpoint.  dedup_clusters on the test corpus
+    runs in 12 jobs, its final collect included."""
+    from mapreduceinfrastructure_spark.operators.dedup import (
+        connected_components,
+        dedup_clusters,
+    )
+
+    build_jobs = 2  # one exchange: the AQE map stage + the checkpoint
+    for k in (1, 2):
+        edges = _path_edges(spark, k + 1)
+        _, n_jobs = _jobs_in_group(
+            spark, f"test-cc-cadence-{k}", lambda: connected_components(edges)
+        )
+        assert n_jobs <= build_jobs + 2 * k, (k, n_jobs)
+
+    rows, n_jobs = _jobs_in_group(
+        spark, "test-cc-dedup-clusters",
+        lambda: dedup_clusters(spark, sf_dir).collect(),
+    )
+    assert rows
+    assert n_jobs <= 12, n_jobs
 
 
 def test_triangle_degree_orientation_same_result(spark, sf_dir):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from collections import Counter
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -93,6 +93,12 @@ def test_rows_only_queries_are_deterministic(spark, sf_dir):
         max_size=24,
     )
 )
+# a 3-node chain: one moving round after the fused build
+@example(raw_edges=[(0, 1), (1, 2)])
+# deep enough to reach the pointer-jumping rounds
+@example(raw_edges=[(i, i + 1) for i in range(15)])
+# duplicate and reversed edges: a multigraph
+@example(raw_edges=[(3, 5), (5, 3), (3, 5), (5, 9), (9, 5), (1, 2), (2, 1)])
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 def test_connected_components_matches_union_find(spark, raw_edges):
     """connected_components == union-find min-labels on random graphs
