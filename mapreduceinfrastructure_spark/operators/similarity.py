@@ -86,6 +86,64 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pq_corpus_fingerprint(sf_dir: str):
+    """Cheap content fingerprint of the embeddings table at ``sf_dir``
+    (sorted (name, mtime_ns, size) of the parquet file/dir parts), or
+    None when unstat-able — None disables memoization rather than
+    risking a stale hit (ADVICE r14)."""
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    try:
+        if os.path.isdir(path):
+            return tuple(
+                (p, os.stat(os.path.join(path, p)).st_mtime_ns,
+                 os.stat(os.path.join(path, p)).st_size)
+                for p in sorted(os.listdir(path))
+            )
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    except OSError:
+        return None
+
+
+# Build-once store for the search artifacts a production index builds
+# once per corpus and serves to every query: the IVF coarse quantizer,
+# the residual frame, the PQ code frames, the bounded query set and the
+# trained PQ codebooks.  Key: (Spark application id, artifact kind,
+# sf_dir, corpus fingerprint, params).  The application id scopes the
+# DataFrame handles, whose localCheckpoint blocks live on that
+# context's executors; the fingerprint invalidates an entry when the
+# corpus at sf_dir is rewritten in-process; ``params`` holds whatever
+# else the artifact depends on (never Python hash() of values).  None
+# is a cached value (an empty corpus is not re-collected).
+_ARTIFACTS: dict[tuple, object] = {}
+
+
+def _artifact(spark, sf_dir: str | None, kind: str, params: tuple, build):
+    """``build()`` once per (application, kind, sf_dir, fingerprint,
+    params).  Without ``sf_dir``, or for an unstat-able corpus, every
+    call builds.  A miss first drops the entries that can never hit
+    again: another application's, and this sf_dir's under another
+    fingerprint."""
+    fp = None if sf_dir is None else _pq_corpus_fingerprint(sf_dir)
+    if fp is None:
+        return build()
+    app = spark.sparkContext.applicationId
+    key = (app, kind, sf_dir, fp, params)
+    if key in _ARTIFACTS:
+        return _ARTIFACTS[key]
+    for k in [
+        k for k in _ARTIFACTS if k[0] != app or (k[2] == sf_dir and k[3] != fp)
+    ]:
+        del _ARTIFACTS[k]
+    _ARTIFACTS[key] = out = build()
+    return out
+
+
+def artifact_reset() -> None:
+    """Drop every memoized search artifact."""
+    _ARTIFACTS.clear()
+
+
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for the first 50 query vectors.
 
@@ -762,28 +820,14 @@ def _ivf_assignment_mode(sf_dir: str) -> tuple[bool, int]:
     return k_est >= IVF_TWO_LEVEL_MIN_K, m
 
 
-# Build-once memo for the IVF coarse quantizer (r16, the
-# _RESIDUAL_FRAME_CACHE pattern one level down): every IVF consumer
-# (ann_ivf, ann_ivf_adc, ann_probe_sweep, ivf_split_plan, the whole
-# residual family via _residual_frame) shares one trained quantizer
-# per corpus instead of re-running the Lloyd recurrence per call —
-# production trains the coarse quantizer once and serves it.  Keyed
-# by (Spark application id, sf_dir, corpus fingerprint, resolved
-# (two_level, m) assignment mode — ADVICE r16: flat and two-level
-# assignments differ by design, so an env-forced two-level session
-# must not serve its handle to a flat-mode caller); the payload
-# is two DataFrame handles (the centroids are already eagerly
-# localCheckpointed inside, so reuse skips the training passes AND
-# their K x EMBED_DIM driver collects).
-_IVF_ASSIGN_CACHE: dict[tuple, tuple] = {}
-
-
 def ivf_assignments(spark: SparkSession, sf_dir: str):
     """IVF index build: deterministic seed centroids (every 40th vector)
     refined by 2 Lloyd iterations, then nearest-centroid assignment.
-    Memoized per (application, sf_dir, corpus fingerprint) — train the
-    coarse quantizer once per corpus (r16; the _pq_train_flat /
-    _residual_frame precedent, measured in scratch/ivf_memo_ab.py).
+    Built once per corpus and resolved assignment mode (:func:`_artifact`;
+    ADVICE r16: flat and two-level assignments differ by design, so a
+    forced two-level session must not serve its handle to a flat-mode
+    caller).  The centroids are eagerly localCheckpointed inside, so a
+    hit skips the training passes and their K x EMBED_DIM collects.
 
     Flat regime (k below IVF_TWO_LEVEL_MIN_K — every test SF) since
     r18 (guide §4.2): each Lloyd pass is ONE mapInPandas corpus scan —
@@ -810,22 +854,15 @@ def ivf_assignments(spark: SparkSession, sf_dir: str):
     loop (its centroid table is corpus-scale and must never drop to a
     driver array).  Returns (assign_df, centroids_df).
     """
-    fp = _pq_corpus_fingerprint(sf_dir)
     two_level, m = _ivf_assignment_mode(sf_dir)
-    key = None
-    if fp is not None:
-        key = (spark.sparkContext.applicationId, sf_dir, fp, two_level, m)
-        hit = _IVF_ASSIGN_CACHE.get(key)
-        if hit is not None:
-            return hit
-    emb = _embeddings(spark, sf_dir)
-    if two_level:
-        out = _ivf_lloyd_two_level(spark, emb, m)
-    else:
-        out = _ivf_lloyd_flat_batched(spark, emb)
-    if key is not None:
-        _IVF_ASSIGN_CACHE[key] = out
-    return out
+
+    def build():
+        emb = _embeddings(spark, sf_dir)
+        if two_level:
+            return _ivf_lloyd_two_level(spark, emb, m)
+        return _ivf_lloyd_flat_batched(spark, emb)
+
+    return _artifact(spark, sf_dir, "ivf", (two_level, m), build)
 
 
 def _ivf_lloyd_flat_batched(spark: SparkSession, emb: DataFrame):
@@ -2048,32 +2085,6 @@ def _batched_codes(
     )
 
 
-# Bounded query-set memo for the batched search kernels: every search
-# audit reads the SAME vec_id < N_QUERIES rows, and without the memo
-# each kernel invocation pays one collect job (~0.65 s of driver wall
-# at sf0.1 — measured in scratch/r18_mip_overhead.py).  Keyed like
-# _PQ_TRAIN_CACHE: (application id, sf_dir, corpus fingerprint) — a
-# bounded input artifact (N_QUERIES x EMBED_DIM doubles), the same
-# transport class as the collected codebook seeds.
-_QUERY_SET_CACHE: dict[tuple, tuple | None] = {}
-
-
-# Encode-once memo for the PQ code columns (r18): the IVF-filtered
-# search family re-derived the corpus code projection on EVERY
-# consumer invocation — at sf0.1 that is one extra Arrow stage per
-# query run; production builds the code index ONCE and serves it (the
-# codes ARE the index).  Keyed like _RESIDUAL_FRAME_CACHE plus the
-# codebook content digest — sha1 of its float64 bytes, so two
-# codebooks share an entry only if bit-identical (Python hash() of the
-# values collides: hash(-1.0) == hash(-2.0)).  Covers seed-vs-trained,
-# codebook bits, and the assignment mode the residual codebook already
-# depends on.
-# Payload is a non-eagerly checkpointed DataFrame handle — plan-only
-# consumers print without materializing, the first action pays the
-# encode, every later consumer reads the blocks.
-_PQ_CODES_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _codes_frame(
     spark: SparkSession,
     sf_dir: str,
@@ -2084,25 +2095,24 @@ def _codes_frame(
     vcol: str,
     kind: str,
 ) -> DataFrame:
-    key = None
-    fp = _pq_corpus_fingerprint(sf_dir)
-    if fp is not None:
-        key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            fp,
-            kind,
-            n_codes,
-            hashlib.sha1(np.asarray(flat_vals, dtype=np.float64).tobytes()).hexdigest(),
-        )
-        hit = _PQ_CODES_CACHE.get(key)
-        if hit is not None:
-            return hit
-    out = _batched_codes(src, flat_vals, n_codes, passthrough, vcol)
-    out = out.localCheckpoint(eager=False)
-    if key is not None:
-        _PQ_CODES_CACHE[key] = out
-    return out
+    """The PQ code index over ``src`` (r18): encoded once per corpus by
+    the Arrow batch kernel — production builds the code index once and
+    serves it (the codes ARE the index).  Memoized on the code kind,
+    n_codes, the sha1 of the codebook's float64 bytes (two codebooks
+    share an entry only if bit-identical; Python hash() of the values
+    collides: hash(-1.0) == hash(-2.0)) and the resolved IVF assignment
+    mode the ``cid`` passthrough and the residual codebook derive from.
+    The handle is a non-eager localCheckpoint: plan-only consumers
+    print without materializing, the first action pays the encode,
+    every later consumer reads the blocks."""
+    digest = hashlib.sha1(np.asarray(flat_vals, dtype=np.float64).tobytes())
+    params = (kind, n_codes, digest.hexdigest()) + _ivf_assignment_mode(sf_dir)
+
+    def build():
+        out = _batched_codes(src, flat_vals, n_codes, passthrough, vcol)
+        return out.localCheckpoint(eager=False)
+
+    return _artifact(spark, sf_dir, "codes", params, build)
 
 
 def _collect_queries(emb: DataFrame, sf_dir: str | None = None):
@@ -2110,29 +2120,22 @@ def _collect_queries(emb: DataFrame, sf_dir: str | None = None):
     the batched search kernels — (qids, qvecs) plain Python lists, or
     None when empty.  The same N_QUERIES x EMBED_DIM transport the
     broadcast query frame already paid, just landed in the closure.
-    Memoized per (application, sf_dir, corpus fingerprint) when
-    ``sf_dir`` is given."""
-    key = None
-    if sf_dir is not None:
-        fp = _pq_corpus_fingerprint(sf_dir)
-        if fp is not None:
-            key = (emb.sparkSession.sparkContext.applicationId, sf_dir, fp)
-            if key in _QUERY_SET_CACHE:
-                return _QUERY_SET_CACHE[key]
-    rows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "v")
-        .orderBy("vec_id")
-        .collect()
-    )
-    out = (
-        ([int(r["vec_id"]) for r in rows], [list(r["v"]) for r in rows])
-        if rows
-        else None
-    )
-    if key is not None:
-        _QUERY_SET_CACHE[key] = out
-    return out
+    With ``sf_dir`` it is collected once per corpus (:func:`_artifact`):
+    every search audit reads the same rows, and each collect is one
+    job (~0.65 s of driver wall at sf0.1)."""
+
+    def build():
+        rows = (
+            emb.filter(F.col("vec_id") < N_QUERIES)
+            .select("vec_id", "v")
+            .orderBy("vec_id")
+            .collect()
+        )
+        if not rows:
+            return None
+        return [int(r["vec_id"]) for r in rows], [list(r["v"]) for r in rows]
+
+    return _artifact(emb.sparkSession, sf_dir, "queries", (), build)
 
 
 def _exact_topk_frame(
@@ -2424,17 +2427,6 @@ def ann_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Build-once memo for the residual index frame (ADVICE r15): every
-# residual consumer (ivf_pq_residual, ivf_pq_adc_topk and the recall
-# reports over them) shares one checkpointed frame per corpus instead
-# of re-materializing it per call.  Keyed by (Spark application id,
-# sf_dir, corpus fingerprint) — localCheckpoint blocks live on THIS
-# context's executors, so a new session must rebuild; the fingerprint
-# reuses _pq_corpus_fingerprint's invalidation rule.  Payload is two
-# DataFrame handles, not data.
-_RESIDUAL_FRAME_CACHE: dict[tuple, tuple] = {}
-
-
 def _residual_frame(spark: SparkSession, sf_dir: str):
     """The materialized residual index (vec_id, cid, rv = v − cell
     centroid) plus the checkpointed centroid table — shared by the
@@ -2449,34 +2441,28 @@ def _residual_frame(spark: SparkSession, sf_dir: str):
     materialized copy instead of re-deriving residuals (a Lloyd
     assignment pass each) per training scan.
 
-    The checkpoint is NON-eager and the frame memoized per (app, sf_dir,
-    corpus fingerprint) — ADVICE r15: plan-only consumers (dump_plans,
+    The checkpoint is NON-eager and the frame built once per corpus
+    (:func:`_artifact`) — ADVICE r15: plan-only consumers (dump_plans,
     test_plans' formatted_plan) print without triggering a
     materialization job, the first real action materializes the RDD
     blocks once, and every later consumer in the session reuses them.
+    The frame derives from ivf_assignments, so its memo inherits the
+    resolved assignment-mode key term (ADVICE r16): a mode switch
+    within one session must rebuild, not reuse.
     """
-    fp = _pq_corpus_fingerprint(sf_dir)
-    key = None
-    if fp is not None:
-        # The residual frame derives from ivf_assignments, so its memo
-        # inherits the resolved assignment-mode key term (ADVICE r16):
-        # a mode switch within one session must rebuild, not reuse.
-        key = (
-            spark.sparkContext.applicationId, sf_dir, fp,
-        ) + _ivf_assignment_mode(sf_dir)
-        hit = _RESIDUAL_FRAME_CACHE.get(key)
-        if hit is not None:
-            return hit
-    assign, cents = ivf_assignments(spark, sf_dir)
-    res = assign.join(F.broadcast(cents), "cid").select(
-        "vec_id",
-        "cid",
-        F.zip_with("v", "cv", lambda x, y: x - y).alias("rv"),
+
+    def build():
+        assign, cents = ivf_assignments(spark, sf_dir)
+        res = assign.join(F.broadcast(cents), "cid").select(
+            "vec_id",
+            "cid",
+            F.zip_with("v", "cv", lambda x, y: x - y).alias("rv"),
+        )
+        return fan_out(res, spark).localCheckpoint(eager=False), cents
+
+    return _artifact(
+        spark, sf_dir, "residual", _ivf_assignment_mode(sf_dir), build
     )
-    out = fan_out(res, spark).localCheckpoint(eager=False), cents
-    if key is not None:
-        _RESIDUAL_FRAME_CACHE[key] = out
-    return out
 
 
 def ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3283,44 +3269,6 @@ def rerank_cap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQ_TRAIN_ITERS = 3
 
 
-# Train-once memo: every PQ consumer (pq_quantize, pq_adc_topk,
-# ann_ivf_adc, ivf_pq_residual, pq_train_codebooks, pq_recall_report)
-# needs the trained codebook, and a production pipeline trains once
-# and reuses the artifact — the driver-side analog of the persisted tf
-# index (bench/verify sessions are warm-artifact by construction,
-# SCALE.md "incremental_dedup_banded watch item").  Keyed by (kind,
-# sf_dir, corpus fingerprint): ``kind`` separates the raw-vector
-# codebook from the residual one, and the fingerprint (mtime_ns +
-# size of every embeddings.parquet part, ADVICE r14) invalidates the
-# memo when the corpus at a path is rewritten within one driver
-# process.  Payload is <= 2 x n_codes x EMBED_DIM doubles per entry.
-_PQ_TRAIN_CACHE: dict[tuple, tuple | None] = {}
-
-
-def _pq_corpus_fingerprint(sf_dir: str):
-    """Cheap content fingerprint of the embeddings table at ``sf_dir``
-    (sorted (name, mtime_ns, size) of the parquet file/dir parts), or
-    None when unstat-able — None disables memoization rather than
-    risking a stale hit (ADVICE r14)."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        if os.path.isdir(path):
-            return tuple(
-                (p, os.stat(os.path.join(path, p)).st_mtime_ns,
-                 os.stat(os.path.join(path, p)).st_size)
-                for p in sorted(os.listdir(path))
-            )
-        st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return None
-
-
-def pq_train_cache_reset() -> None:
-    """Documented reset hook for the train-once memo (ADVICE r14)."""
-    _PQ_TRAIN_CACHE.clear()
-
-
 def _pq_train_flat(
     emb: DataFrame,
     sf_dir: str | None = None,
@@ -3329,7 +3277,11 @@ def _pq_train_flat(
 ):
     """Run PQ_TRAIN_ITERS Lloyd steps over all subspaces at once;
     returns (codes, seed_flat, trained_flat) or None on empty corpus.
-    With ``sf_dir`` the result memoizes per corpus (train once).
+    With ``sf_dir`` it trains once per corpus (:func:`_artifact`):
+    every PQ consumer needs the trained codebook, and a production
+    pipeline trains once and reuses it.  The key separates the raw
+    codebook from the residual one, whose residuals also depend on the
+    resolved IVF assignment mode (ADVICE r16).
 
     Scale shape per iteration (r18, guide §4.2): ONE corpus scan
     through a mapInPandas partial-sum pass — each Arrow batch is
@@ -3353,58 +3305,49 @@ def _pq_train_flat(
     No join, no corpus-linear broadcast, lineage never grows (each
     pass plans from the raw table plus a fresh closure codebook).
     """
-    key = None
-    if sf_dir is not None:
-        fp = _pq_corpus_fingerprint(sf_dir)
-        if fp is not None:
-            key = (kind, k or PQ_K, sf_dir, fp)
-            if kind == "residual":
-                # Residuals depend on the IVF assignment, which depends
-                # on the resolved assignment mode (ADVICE r16) — key it.
-                key = key + _ivf_assignment_mode(sf_dir)
-    if key is not None and key in _PQ_TRAIN_CACHE:
-        return _PQ_TRAIN_CACHE[key]
-    cb = _pq_collect_codebook(emb, k)
-    if cb is None:
-        if key is not None:
-            _PQ_TRAIN_CACHE[key] = None
-        return None
-    from ..functions import batchmath as bm
-    from ..session import ensure_package_on_executors
 
-    ensure_package_on_executors(emb.sparkSession)
-    codes, seed_flat = cb
-    n_codes = len(codes)
-    flat = list(seed_flat)
-    vproj = emb.select("v")
-    for _ in range(PQ_TRAIN_ITERS):
-        cells = (
-            vproj.mapInPandas(
-                bm.pq_train_partials_fn(flat, n_codes, PQ_SUB, PQ_SUBDIM),
-                schema="code int, pos int, s double, c long",
+    def build():
+        cb = _pq_collect_codebook(emb, k)
+        if cb is None:
+            return None
+        from ..functions import batchmath as bm
+        from ..session import ensure_package_on_executors
+
+        ensure_package_on_executors(emb.sparkSession)
+        codes, seed_flat = cb
+        n_codes = len(codes)
+        flat = list(seed_flat)
+        vproj = emb.select("v")
+        for _ in range(PQ_TRAIN_ITERS):
+            cells = (
+                vproj.mapInPandas(
+                    bm.pq_train_partials_fn(flat, n_codes, PQ_SUB, PQ_SUBDIM),
+                    schema="code int, pos int, s double, c long",
+                )
+                .groupBy("code", "pos")
+                .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
+                .collect()
             )
-            .groupBy("code", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
-            .collect()
-        )
-        nxt = list(flat)
-        for r in cells:
-            nxt[int(r["code"]) * EMBED_DIM + int(r["pos"])] = float(
-                r["s"]
-            ) / float(r["c"])
-        flat = nxt
-    out = (codes, list(seed_flat), flat)
-    if key is not None:
-        _PQ_TRAIN_CACHE[key] = out
-    return out
+            nxt = list(flat)
+            for r in cells:
+                nxt[int(r["code"]) * EMBED_DIM + int(r["pos"])] = float(
+                    r["s"]
+                ) / float(r["c"])
+            flat = nxt
+        return codes, list(seed_flat), flat
+
+    params = (kind, k or PQ_K)
+    if kind == "residual" and sf_dir is not None:
+        params += _ivf_assignment_mode(sf_dir)
+    return _artifact(emb.sparkSession, sf_dir, "pq_train", params, build)
 
 
 # Production codebook switch (VERDICT r14 #1): the encode/search path
 # uses the Lloyd-TRAINED codebook (pq_train_codebooks measured -31%
 # quantization error and pq_recall_report trained >= seed recall at
 # every banked geometry); SPARK_GRAFT_PQ_SEED=1 keeps the seed
-# codebook reachable for the A/B (scratch/pq_trained_ab.py) and for
-# isolating training cost from encode cost in benchmarks.
+# codebook reachable for A/B runs and for isolating training cost
+# from encode cost in benchmarks.
 PQ_SEED_ENV = "SPARK_GRAFT_PQ_SEED"
 
 
@@ -3603,8 +3546,8 @@ def pq_bits_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each variant is exactly pq_adc_topk's plan (narrow
     code-column corpus pass, broadcast bounded query ADC tables,
     map-side WindowGroupLimit top-k); the 8-bit codebook trains with
-    the same PQ_TRAIN_ITERS one-scan Lloyd passes (train-once memo
-    keyed by (kind, k, sf_dir, fingerprint)) and its 256 x EMBED_DIM
+    the same PQ_TRAIN_ITERS one-scan Lloyd passes (train-once memo,
+    k in its params) and its 256 x EMBED_DIM
     flat codebook rides the geometry-driven _pq_codebook_source
     transport (128 KiB — still the literal path; past 1 MiB it
     switches to the broadcast frame).  The exact leg is one

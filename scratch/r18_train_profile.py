@@ -39,11 +39,10 @@ clock("corpus_count", lambda: emb.count())
 clock("pq_collect_codebook", lambda: sim._pq_collect_codebook(emb))
 
 # 2. raw PQ Lloyd training: PQ_TRAIN_ITERS one-scan passes
-sim.pq_train_cache_reset()
+sim.artifact_reset()
 clock("pq_train_raw", lambda: sim._pq_train_flat(emb, SF_DIR))
 
 # 3. IVF coarse quantizer: LLOYD_ITERATIONS passes + final assignment
-sim._IVF_ASSIGN_CACHE.clear()
 assign_cents = clock("ivf_train", lambda: sim.ivf_assignments(spark, SF_DIR))
 clock(
     "ivf_assign_materialize",
@@ -54,7 +53,6 @@ clock(
 )
 
 # 4. residual frame (assignment join + checkpoint materialization)
-sim._RESIDUAL_FRAME_CACHE.clear()
 res_cents = clock("residual_frame_build", lambda: sim._residual_frame(spark, SF_DIR))
 clock(
     "residual_frame_materialize",

@@ -76,3 +76,14 @@ def assert_matches_oracle(spark_df, duck_con, sql: str, float_tol: float = 0.0) 
                 f"{col}: {int((~eq).sum())} mismatches\n"
                 f"spark:\n{got[~eq].head()}\noracle:\n{want[~eq].head()}"
             )
+
+
+def jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -156,7 +156,7 @@ def test_exact_topk_partials_superset_of_global_topk(corpus, spark):
 
 
 def test_pq_codes_cache_keys_on_codebook_content(spark, sf_dir, corpus):
-    """_PQ_CODES_CACHE keys on the codebook's float64 bytes: codebooks
+    """The code-frame memo keys on the codebook's float64 bytes: codebooks
     differing in one value get separate entries, even where Python's
     hash() of the values collides (hash(-1.0) == hash(-2.0))."""
     df, _ = corpus
@@ -172,15 +172,15 @@ def test_pq_codes_cache_keys_on_codebook_content(spark, sf_dir, corpus):
             spark, sf_dir, df, flat, n_codes, ("vec_id",), "v", "cache-key-test"
         )
 
-    before = set(sim._PQ_CODES_CACHE)
+    before = set(sim._ARTIFACTS)
     try:
         fa, fb = codes(flat_a), codes(flat_b)
         assert fa is not fb
-        assert len(set(sim._PQ_CODES_CACHE) - before) == 2
+        assert len(set(sim._ARTIFACTS) - before) == 2
         assert codes(flat_a) is fa  # a bit-identical codebook hits
     finally:
-        for k in set(sim._PQ_CODES_CACHE) - before:
-            del sim._PQ_CODES_CACHE[k]
+        for k in set(sim._ARTIFACTS) - before:
+            del sim._ARTIFACTS[k]
 
 
 def test_cosine_topk_zero_norm_row():

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from mapreduceinfrastructure_spark.operators.graph import pagerank_nations, trade_edges
+from tests.conftest import jobs_in_group
 
 
 def test_trade_graph_shape(spark, sf_dir):
@@ -92,17 +93,6 @@ def _path_edges(spark, n):
     return fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
 
-def _jobs_in_group(spark, group, fn):
-    """Run ``fn`` under a job group; return its result and job count."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_connected_components_raises_when_rounds_run_out(spark):
     """A 40-node path needs far more than two rounds: returning its
     unconverged labels (38 distinct for one component) would be a
@@ -128,12 +118,12 @@ def test_connected_components_job_cadence(spark, sf_dir):
     build_jobs = 2  # one exchange: the AQE map stage + the checkpoint
     for k in (1, 2):
         edges = _path_edges(spark, k + 1)
-        _, n_jobs = _jobs_in_group(
+        _, n_jobs = jobs_in_group(
             spark, f"test-cc-cadence-{k}", lambda: connected_components(edges)
         )
         assert n_jobs <= build_jobs + 2 * k, (k, n_jobs)
 
-    rows, n_jobs = _jobs_in_group(
+    rows, n_jobs = jobs_in_group(
         spark, "test-cc-dedup-clusters",
         lambda: dedup_clusters(spark, sf_dir).collect(),
     )

@@ -44,7 +44,7 @@ def test_lit_long_array_values_and_type(spark):
 
 
 def test_ivf_assign_cache_keys_on_mode(spark, sf_dir, monkeypatch):
-    """ADVICE r16: _IVF_ASSIGN_CACHE keys on the resolved (two_level,
+    """ADVICE r16: the ivf_assignments memo keys on the resolved (two_level,
     m) — within one session, a mode flip rebuilds instead of serving
     the other mode's (different-by-design) assignment; returning to a
     mode hits that mode's own memo entry."""
