@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..functions.vector import cosine_similarity_expr, lit_double_array
-from ..sources.tables import fan_out, load_table
+from ..sources.tables import _artifact, fan_out, load_table
 
 EMBED_DIM = 64
 N_TABLES = 8
@@ -84,64 +84,6 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fan_out(load_table(spark, sf_dir, "embeddings"), spark).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-
-
-def _pq_corpus_fingerprint(sf_dir: str):
-    """Cheap content fingerprint of the embeddings table at ``sf_dir``
-    (sorted (name, mtime_ns, size) of the parquet file/dir parts), or
-    None when unstat-able — None disables memoization rather than
-    risking a stale hit (ADVICE r14)."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        if os.path.isdir(path):
-            return tuple(
-                (p, os.stat(os.path.join(path, p)).st_mtime_ns,
-                 os.stat(os.path.join(path, p)).st_size)
-                for p in sorted(os.listdir(path))
-            )
-        st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return None
-
-
-# Build-once store for the search artifacts a production index builds
-# once per corpus and serves to every query: the IVF coarse quantizer,
-# the residual frame, the PQ code frames, the bounded query set and the
-# trained PQ codebooks.  Key: (Spark application id, artifact kind,
-# sf_dir, corpus fingerprint, params).  The application id scopes the
-# DataFrame handles, whose localCheckpoint blocks live on that
-# context's executors; the fingerprint invalidates an entry when the
-# corpus at sf_dir is rewritten in-process; ``params`` holds whatever
-# else the artifact depends on (never Python hash() of values).  None
-# is a cached value (an empty corpus is not re-collected).
-_ARTIFACTS: dict[tuple, object] = {}
-
-
-def _artifact(spark, sf_dir: str | None, kind: str, params: tuple, build):
-    """``build()`` once per (application, kind, sf_dir, fingerprint,
-    params).  Without ``sf_dir``, or for an unstat-able corpus, every
-    call builds.  A miss first drops the entries that can never hit
-    again: another application's, and this sf_dir's under another
-    fingerprint."""
-    fp = None if sf_dir is None else _pq_corpus_fingerprint(sf_dir)
-    if fp is None:
-        return build()
-    app = spark.sparkContext.applicationId
-    key = (app, kind, sf_dir, fp, params)
-    if key in _ARTIFACTS:
-        return _ARTIFACTS[key]
-    for k in [
-        k for k in _ARTIFACTS if k[0] != app or (k[2] == sf_dir and k[3] != fp)
-    ]:
-        del _ARTIFACTS[k]
-    _ARTIFACTS[key] = out = build()
-    return out
-
-
-def artifact_reset() -> None:
-    """Drop every memoized search artifact."""
-    _ARTIFACTS.clear()
 
 
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -862,7 +804,7 @@ def ivf_assignments(spark: SparkSession, sf_dir: str):
             return _ivf_lloyd_two_level(spark, emb, m)
         return _ivf_lloyd_flat_batched(spark, emb)
 
-    return _artifact(spark, sf_dir, "ivf", (two_level, m), build)
+    return _artifact(spark, sf_dir, "embeddings", "ivf", (two_level, m), build)
 
 
 def _ivf_lloyd_flat_batched(spark: SparkSession, emb: DataFrame):
@@ -2112,7 +2054,7 @@ def _codes_frame(
         out = _batched_codes(src, flat_vals, n_codes, passthrough, vcol)
         return out.localCheckpoint(eager=False)
 
-    return _artifact(spark, sf_dir, "codes", params, build)
+    return _artifact(spark, sf_dir, "embeddings", "codes", params, build)
 
 
 def _collect_queries(emb: DataFrame, sf_dir: str | None = None):
@@ -2135,7 +2077,7 @@ def _collect_queries(emb: DataFrame, sf_dir: str | None = None):
             return None
         return [int(r["vec_id"]) for r in rows], [list(r["v"]) for r in rows]
 
-    return _artifact(emb.sparkSession, sf_dir, "queries", (), build)
+    return _artifact(emb.sparkSession, sf_dir, "embeddings", "queries", (), build)
 
 
 def _exact_topk_frame(
@@ -2461,7 +2403,7 @@ def _residual_frame(spark: SparkSession, sf_dir: str):
         return fan_out(res, spark).localCheckpoint(eager=False), cents
 
     return _artifact(
-        spark, sf_dir, "residual", _ivf_assignment_mode(sf_dir), build
+        spark, sf_dir, "embeddings", "residual", _ivf_assignment_mode(sf_dir), build
     )
 
 
@@ -3339,7 +3281,9 @@ def _pq_train_flat(
     params = (kind, k or PQ_K)
     if kind == "residual" and sf_dir is not None:
         params += _ivf_assignment_mode(sf_dir)
-    return _artifact(emb.sparkSession, sf_dir, "pq_train", params, build)
+    return _artifact(
+        emb.sparkSession, sf_dir, "embeddings", "pq_train", params, build
+    )
 
 
 # Production codebook switch (VERDICT r14 #1): the encode/search path

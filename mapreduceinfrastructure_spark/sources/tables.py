@@ -30,6 +30,15 @@ TABLE_NAMES = (
 # (region=5, nation=25 rows fixed; TPC-H dims scale sub-linearly).
 BROADCASTABLE = frozenset({"region", "nation", "supplier"})
 
+# The session confs that change the schema parquet inference yields
+# (nanosAsLong is pinned by load_table itself).
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
@@ -55,7 +64,94 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_excluded_rule(
         spark, "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     )
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    # Schema inference reads the parquet footers in a Spark job (one per
+    # call, even for one file); a read with the schema given submits
+    # none.  So the schema is inferred once per table file and session
+    # inference confs, and a miss returns the frame it was inferred from
+    # rather than reading twice.
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    inferred = []
+
+    def infer():
+        inferred.append(spark.read.parquet(path))
+        return inferred[0].schema
+
+    params = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    schema = _artifact(spark, sf_dir, name, "schema", params, infer)
+    if inferred:
+        return inferred[0]
+    return spark.read.schema(schema).parquet(path)
+
+
+def _table_fingerprint(sf_dir: str, table: str):
+    """Cheap content fingerprint of ``<sf_dir>/<table>.parquet``: its
+    (mtime_ns, size) for a file, or the sorted (relative path, mtime_ns,
+    size) of every file under it, at any depth, for a directory.  None
+    when any of it is unstat-able: None disables memoization rather
+    than risking a stale hit."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (st.st_mtime_ns, st.st_size)
+        parts = []
+        for root, _, files in os.walk(path, onerror=_raise):
+            for f in files:
+                part = os.path.join(root, f)
+                st = os.stat(part)
+                parts.append((os.path.relpath(part, path), st.st_mtime_ns, st.st_size))
+        return tuple(sorted(parts))
+    except OSError:
+        return None
+
+
+def _raise(err: OSError):
+    raise err  # os.walk skips an unlistable directory unless told
+
+
+# Build-once store for what is derived from a table file and reused
+# while the file is unchanged: each table's inferred schema ("schema")
+# and the search artifacts a production index builds once per corpus
+# and serves to every query (similarity.py: the IVF coarse quantizer,
+# the residual frame, the PQ code frames, the bounded query set and the
+# trained PQ codebooks).  Key: (Spark application id, artifact kind,
+# sf_dir, table, table fingerprint, params).  The application id scopes
+# the DataFrame handles, whose localCheckpoint blocks live on that
+# context's executors; the fingerprint invalidates an entry when the
+# table at sf_dir is rewritten in-process; ``params`` holds whatever
+# else the artifact depends on (never Python hash() of values).  None
+# is a cached value (an empty corpus is not re-collected).
+_ARTIFACTS: dict[tuple, object] = {}
+
+
+def _artifact(
+    spark, sf_dir: str | None, table: str, kind: str, params: tuple, build
+):
+    """``build()`` once per (application, kind, sf_dir, table,
+    fingerprint, params).  Without ``sf_dir``, or for an unstat-able
+    table, every call builds.  A miss first drops the entries that can
+    never hit again: another application's, and this table's under
+    another fingerprint."""
+    fp = None if sf_dir is None else _table_fingerprint(sf_dir, table)
+    if fp is None:
+        return build()
+    app = spark.sparkContext.applicationId
+    key = (app, kind, sf_dir, table, fp, params)
+    if key in _ARTIFACTS:
+        return _ARTIFACTS[key]
+    for k in [
+        k
+        for k in _ARTIFACTS
+        if k[0] != app or (k[2:4] == (sf_dir, table) and k[4] != fp)
+    ]:
+        del _ARTIFACTS[k]
+    _ARTIFACTS[key] = out = build()
+    return out
+
+
+def artifact_reset() -> None:
+    """Drop every memoized table schema and search artifact."""
+    _ARTIFACTS.clear()
 
 
 def _ensure_conf(spark: SparkSession, key: str, value: str) -> None:

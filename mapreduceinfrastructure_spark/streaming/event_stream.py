@@ -24,16 +24,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as an unbounded stream (parquet file source discovers the
     file(s); in production this is Kafka/queue — same downstream plan).
 
-    The file-stream source needs an explicit schema; we probe it from a
-    batch read of the same path (driver-side metadata only, no scan), so
-    both physical ts layouts work: TIMESTAMP(NANOS)-as-long gets
-    microsecond truncation, timestamp[us] (TIMESTAMP / TIMESTAMP_NTZ)
-    gets a plain TIMESTAMP cast with the session zone pinned UTC —
-    identical downstream watermark/window semantics either way.
+    The file-stream source needs an explicit schema; we take the batch
+    table's (:func:`load_table` infers it once per table file and pins
+    the ts confs), so both physical ts layouts work: TIMESTAMP(NANOS)-
+    as-long gets microsecond truncation, timestamp[us] (TIMESTAMP /
+    TIMESTAMP_NTZ) gets a plain TIMESTAMP cast with the session zone
+    pinned UTC — identical downstream watermark/window semantics either
+    way.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    from ..sources.tables import load_table
+
+    schema = load_table(spark, sf_dir, "events").schema
     # the file-stream source wants a directory; select just events.parquet
     raw = (
         spark.readStream.schema(schema)
@@ -297,7 +298,9 @@ def streaming_enriched_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``documents`` as an unbounded stream — the shape of a continuous
     crawl feed arriving at a training-data ingest service."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    from ..sources.tables import load_table
+
+    schema = load_table(spark, sf_dir, "documents").schema
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -1121,7 +1124,9 @@ def streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``embeddings`` as an unbounded stream — the shape of a
     continuous vector-insert feed arriving at an index service."""
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
+    from ..sources.tables import load_table
+
+    schema = load_table(spark, sf_dir, "embeddings").schema
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "embeddings.parquet")

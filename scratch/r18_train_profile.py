@@ -17,6 +17,7 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
 from mapreduceinfrastructure_spark.session import get_spark  # noqa: E402
 from mapreduceinfrastructure_spark.operators import similarity as sim  # noqa: E402
+from mapreduceinfrastructure_spark.sources.tables import artifact_reset  # noqa: E402
 
 spark = get_spark(app_name="r18-train-profile")
 spark.range(1).count()  # JVM warmup
@@ -39,7 +40,7 @@ clock("corpus_count", lambda: emb.count())
 clock("pq_collect_codebook", lambda: sim._pq_collect_codebook(emb))
 
 # 2. raw PQ Lloyd training: PQ_TRAIN_ITERS one-scan passes
-sim.artifact_reset()
+artifact_reset()
 clock("pq_train_raw", lambda: sim._pq_train_flat(emb, SF_DIR))
 
 # 3. IVF coarse quantizer: LLOYD_ITERATIONS passes + final assignment

@@ -16,6 +16,7 @@ from mapreduceinfrastructure_spark.functions.vector import (
     lit_double_array,
 )
 from mapreduceinfrastructure_spark.operators import similarity as sim
+from mapreduceinfrastructure_spark.sources import tables
 
 
 @pytest.fixture(scope="module")
@@ -172,15 +173,15 @@ def test_pq_codes_cache_keys_on_codebook_content(spark, sf_dir, corpus):
             spark, sf_dir, df, flat, n_codes, ("vec_id",), "v", "cache-key-test"
         )
 
-    before = set(sim._ARTIFACTS)
+    before = set(tables._ARTIFACTS)
     try:
         fa, fb = codes(flat_a), codes(flat_b)
         assert fa is not fb
-        assert len(set(sim._ARTIFACTS) - before) == 2
+        assert len(set(tables._ARTIFACTS) - before) == 2
         assert codes(flat_a) is fa  # a bit-identical codebook hits
     finally:
-        for k in set(sim._ARTIFACTS) - before:
-            del sim._ARTIFACTS[k]
+        for k in set(tables._ARTIFACTS) - before:
+            del tables._ARTIFACTS[k]
 
 
 def test_cosine_topk_zero_norm_row():
