@@ -25,6 +25,7 @@ from __future__ import annotations
 import glob
 import os
 import random
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -613,6 +614,78 @@ def _release_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
+def _fixpoint(
+    name: str,
+    build: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    probe: F.Column,
+    cols: list[str],
+    max_rounds: int,
+) -> DataFrame:
+    """The iterative-graph round loop: round 0 materializes ``build``,
+    every later round ``step(state, round_no)``.  Each round is one
+    eager localCheckpoint of ``cols`` with ``probe`` (a count_if over
+    the round's frame) observed on it, so the convergence check needs
+    no job of its own; the previous round's blocks are released as
+    soon as the new round is materialized.  Returns the first state
+    whose probe is 0; raises RuntimeError if ``max_rounds`` rounds (the
+    build included) end without one."""
+    frame, state = build, None
+    for round_no in range(max_rounds):
+        if round_no:
+            frame = step(state, round_no)
+        seen = Observation()
+        new_state = (
+            frame.observe(seen, probe.alias("n"))
+            .select(*cols)
+            .localCheckpoint(eager=True)
+        )
+        # new_state is materialized and its lineage no longer reaches
+        # the previous round: free those blocks now, not at GC
+        if state is not None:
+            _release_checkpoint(state)
+        state = new_state
+        if seen.get["n"] == 0:
+            return state
+    if state is not None:
+        _release_checkpoint(state)
+    raise RuntimeError(f"{name}: no fixpoint within max_rounds={max_rounds}")
+
+
+def _cc_round(state: DataFrame, round_no: int) -> DataFrame:
+    """One min-label propagation round over (node, label, nbrs) →
+    (node, label, nbrs, old)."""
+    # one row per (target, sender); only the self row keeps nbrs/old
+    msgs = state.select(
+        F.explode(F.concat(F.array("node"), "nbrs")).alias("node"),
+        F.col("node").alias("src"),
+        "label",
+        "nbrs",
+    )
+    is_self = F.col("node") == F.col("src")
+    nxt = msgs.groupBy("node").agg(
+        F.min("label").alias("label"),
+        F.first(F.when(is_self, F.col("nbrs")), ignorenulls=True).alias("nbrs"),
+        F.max(F.when(is_self, F.col("label"))).alias("old"),
+    )
+    # pointer jumping: l(v) <- l(l(v)).  Labels stay within the
+    # component and only decrease, so the fixpoint is unchanged, but
+    # long chains collapse in O(log diameter) rounds instead of
+    # O(diameter).  Gated on round >= 3: near-dup graphs are almost
+    # always shallow (converged by then, measured 2x faster without
+    # the extra self-join), while a graph still moving after three
+    # rounds has deep chains — exactly when jumping pays.
+    if round_no < 3:
+        return nxt
+    parent = nxt.select(F.col("node").alias("p_node"), F.col("label").alias("p_label"))
+    return nxt.join(parent, nxt.label == parent.p_node, "left").select(
+        "node",
+        F.least("label", F.coalesce("p_label", "label")).alias("label"),
+        "nbrs",
+        "old",
+    )
+
+
 def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Connected components over a symmetric edge table (a, b) →
     (node, label) with label = component minimum.
@@ -628,67 +701,32 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     on, pointer jumping (l(v) <- l(l(v))) collapses long chains in
     O(log diameter) extra rounds instead of O(diameter).
 
-    Each round is one eager localCheckpoint, and the convergence probe
-    rides on it as an observed count_if(label < old): 0 means no label
-    moved, the exact fixpoint (labels only decrease, and a retried
-    stage can only over-count).  Raises RuntimeError if ``max_rounds``
-    rounds (the build included) end without that fixpoint.  Partition
-    counts are left to AQE: a near-dup graph iterates in 1-task
-    stages, a billion-edge graph still shards across the cluster.
+    Rounds run on :func:`_fixpoint`; the probe is count_if(label <
+    old): 0 means no label moved, the exact fixpoint (labels only
+    decrease, and a retried stage can only over-count).  The build
+    compares against old = node, which is 0 only for a graph with no
+    edge between distinct nodes.  Partition counts are left to AQE: a
+    near-dup graph iterates in 1-task stages, a billion-edge graph
+    still shards across the cluster.
     """
-    state = (
+    build = (
         edges.groupBy(F.col("a").alias("node"))
         .agg(F.collect_set("b").alias("nbrs"))
-        .select("node", F.least("node", F.array_min("nbrs")).alias("label"), "nbrs")
-        .localCheckpoint(eager=True)
-    )
-    for round_no in range(1, max_rounds):
-        # one row per (target, sender); only the self row keeps nbrs/old
-        msgs = state.select(
-            F.explode(F.concat(F.array("node"), "nbrs")).alias("node"),
-            F.col("node").alias("src"),
-            "label",
+        .select(
+            "node",
+            F.least("node", F.array_min("nbrs")).alias("label"),
             "nbrs",
+            F.col("node").alias("old"),
         )
-        is_self = F.col("node") == F.col("src")
-        nxt = msgs.groupBy("node").agg(
-            F.min("label").alias("label"),
-            F.first(F.when(is_self, F.col("nbrs")), ignorenulls=True).alias("nbrs"),
-            F.max(F.when(is_self, F.col("label"))).alias("old"),
-        )
-        # pointer jumping: l(v) <- l(l(v)).  Labels stay within the
-        # component and only decrease, so the fixpoint is unchanged, but
-        # long chains collapse in O(log diameter) rounds instead of
-        # O(diameter).  Gated on round >= 3: near-dup graphs are almost
-        # always shallow (converged by then, measured 2x faster without
-        # the extra self-join), while a graph still moving after three
-        # rounds has deep chains — exactly when jumping pays.
-        if round_no >= 3:
-            parent = nxt.select(
-                F.col("node").alias("p_node"), F.col("label").alias("p_label")
-            )
-            nxt = nxt.join(parent, nxt.label == parent.p_node, "left").select(
-                "node",
-                F.least("label", F.coalesce("p_label", "label")).alias("label"),
-                "nbrs",
-                "old",
-            )
-        moved = Observation()
-        new_state = (
-            nxt.observe(moved, F.count_if(F.col("label") < F.col("old")).alias("n"))
-            .select("node", "label", "nbrs")
-            .localCheckpoint(eager=True)
-        )
-        # new_state is materialized and its lineage no longer reaches
-        # the previous round: free those blocks now, not at GC
-        _release_checkpoint(state)
-        state = new_state
-        if moved.get["n"] == 0:
-            return state.select("node", "label")
-    _release_checkpoint(state)
-    raise RuntimeError(
-        f"connected_components: labels still moving after max_rounds={max_rounds}"
     )
+    return _fixpoint(
+        "connected_components",
+        build,
+        _cc_round,
+        F.count_if(F.col("label") < F.col("old")),
+        ["node", "label", "nbrs"],
+        max_rounds,
+    ).select("node", "label")
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -709,10 +747,19 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The iterative algorithm class — see ``connected_components`` for the
     propagation + pointer-jumping scheme and its scale behavior.
     """
+    return connected_components(neardup_edges(spark, sf_dir)).select(
+        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+    )
+
+
+def neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric (a, b) edges of the Jaccard≥0.5 near-dup graph — each
+    ``neardup_pairs`` pair in both orientations — the connected-
+    components input of dedup_clusters and cc_star."""
     pairs = neardup_pairs(
         spark, sf_dir, threshold=0.5, df_cap=HOT_SHINGLE_DF_CAP
     )
-    edges = pairs.select(
+    return pairs.select(
         F.explode(
             F.array(
                 F.struct(F.col("da").alias("a"), F.col("db").alias("b")),
@@ -720,9 +767,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.*")
-    return connected_components(edges).select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
 
 
 # Exact substring-span dedup parameters: span width (tokens) and stride.

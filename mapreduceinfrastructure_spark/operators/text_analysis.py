@@ -28,6 +28,7 @@ from .dedup import (
     SHINGLE_PERSIST_MIN_BYTES,
     _input_bytes,
     _persist_tracked,
+    _release_checkpoint,
 )
 
 # Tiny embedded English stopword list used by the language-ID heuristic
@@ -382,7 +383,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied with an ANSI-safe HOF aggregate fold (F.get returns NULL
     out-of-bounds, no Python in the loop).  Each round's vocab is
     eagerly localCheckpoint'ed so plans stay constant-size across
-    iterations.
+    iterations, and releases the previous round's blocks.
 
     Ties break on (count desc, left asc, right asc) — fully
     deterministic.  Verified two ways: against a pure-Python reference
@@ -456,14 +457,9 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_vocab = vocab.select(fold["out"].alias("s"), "freq").localCheckpoint(
             eager=True
         )
-        # localCheckpoint blocks are NOT freed by DataFrame.unpersist()
-        # (that only clears cache-manager entries); they are reclaimed
-        # when Python GC drops the last reference to the checkpointed
-        # plan.  Rebinding `vocab` drops ours each round, so at most a
-        # couple of vocab-sized block sets are live at once — same
-        # GC-driven cleanup discipline bench.py uses between queries.
+        _release_checkpoint(vocab)
         vocab = new_vocab
-    del vocab
+    _release_checkpoint(vocab)
     return spark.createDataFrame(
         merges, schema="rank long, left string, right string, pair_count long"
     )

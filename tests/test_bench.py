@@ -30,6 +30,9 @@ def test_bench_contract_smoke():
         # BENCH_FULL.json diagnostics
         SPARK_GRAFT_BENCH_FULL=full_path,
     )
+    # a second JVM next to the test session's: keep its heap small
+    # unless the caller sized it
+    env.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,

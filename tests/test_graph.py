@@ -5,7 +5,12 @@ from __future__ import annotations
 
 import pytest
 
-from mapreduceinfrastructure_spark.operators.graph import pagerank_nations, trade_edges
+from mapreduceinfrastructure_spark.operators.dedup import connected_components
+from mapreduceinfrastructure_spark.operators.graph import (
+    pagerank_nations,
+    star_contraction,
+    trade_edges,
+)
 from tests.conftest import jobs_in_group
 
 
@@ -37,8 +42,6 @@ def test_connected_components_deep_chain(spark):
     (plain propagation moves the min label one hop per round)."""
     from pyspark.sql import functions as F
 
-    from mapreduceinfrastructure_spark.operators.dedup import connected_components
-
     n = 200
     fwd = spark.range(n - 1).select(
         F.col("id").alias("a"), (F.col("id") + 1).alias("b")
@@ -49,16 +52,18 @@ def test_connected_components_deep_chain(spark):
     assert {r["label"] for r in labels} == {0}  # one component, min label
 
 
-def test_connected_components_releases_round_checkpoints(spark):
-    """Each round's labels are a localCheckpoint whose blocks
-    ``unpersist()`` cannot free; the loop releases the previous round's
-    blocks itself, so after a multi-round run (pre-jump and jumping
-    rounds both) only the returned labels stay in block storage."""
+@pytest.mark.parametrize(
+    "cc", [connected_components, star_contraction], ids=lambda f: f.__name__
+)
+def test_connected_components_releases_round_checkpoints(spark, cc):
+    """Each round's state is a localCheckpoint whose blocks
+    ``unpersist()`` cannot free; the shared round loop releases the
+    previous round's blocks itself, so after a multi-round run
+    (propagation's pre-jump and jumping rounds both) only the returned
+    labels stay in block storage."""
     import time
 
     from pyspark.sql import functions as F
-
-    from mapreduceinfrastructure_spark.operators.dedup import connected_components
 
     def stored() -> set[int]:
         infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
@@ -70,7 +75,7 @@ def test_connected_components_releases_round_checkpoints(spark):
         F.col("id").alias("a"), (F.col("id") + 1).alias("b")
     )
     edges = fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    labels = connected_components(edges)
+    labels = cc(edges)
     assert {r["label"] for r in labels.collect()} == {0}
     # releases are asynchronous: wait for them to land
     deadline = time.time() + 10
@@ -97,8 +102,6 @@ def test_connected_components_raises_when_rounds_run_out(spark):
     """A 40-node path needs far more than two rounds: returning its
     unconverged labels (38 distinct for one component) would be a
     silent wrong answer, so exhausting max_rounds must raise."""
-    from mapreduceinfrastructure_spark.operators.dedup import connected_components
-
     with pytest.raises(RuntimeError, match="max_rounds=2"):
         connected_components(_path_edges(spark, 40), max_rounds=2).collect()
 
@@ -108,12 +111,11 @@ def test_connected_components_job_cadence(spark, sf_dir):
     carrying the convergence probe, so it costs at most two jobs (the
     AQE map stage and the checkpoint): a path of k + 1 nodes (k <= 2,
     before pointer jumping) needs k rounds after the build, the last
-    one confirming the fixpoint.  dedup_clusters on the test corpus
-    runs in 12 jobs, its final collect included."""
-    from mapreduceinfrastructure_spark.operators.dedup import (
-        connected_components,
-        dedup_clusters,
-    )
+    one confirming the fixpoint.  dedup_clusters and cc_star (the same
+    near-dup graph, star contraction on the same round loop) each run
+    in at most 12 jobs on the test corpus, the final collect included."""
+    from mapreduceinfrastructure_spark.operators.dedup import dedup_clusters
+    from mapreduceinfrastructure_spark.operators.graph import cc_star
 
     build_jobs = 2  # one exchange: the AQE map stage + the checkpoint
     for k in (1, 2):
@@ -123,12 +125,13 @@ def test_connected_components_job_cadence(spark, sf_dir):
         )
         assert n_jobs <= build_jobs + 2 * k, (k, n_jobs)
 
-    rows, n_jobs = jobs_in_group(
-        spark, "test-cc-dedup-clusters",
-        lambda: dedup_clusters(spark, sf_dir).collect(),
-    )
-    assert rows
-    assert n_jobs <= 12, n_jobs
+    for query in (dedup_clusters, cc_star):
+        rows, n_jobs = jobs_in_group(
+            spark, f"test-cc-{query.__name__}",
+            lambda: query(spark, sf_dir).collect(),
+        )
+        assert rows
+        assert n_jobs <= 12, (query.__name__, n_jobs)
 
 
 def test_triangle_degree_orientation_same_result(spark, sf_dir):

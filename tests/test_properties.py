@@ -5,11 +5,14 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mapreduceinfrastructure_spark.functions.text import tokens_expr
+from mapreduceinfrastructure_spark.operators.dedup import connected_components
+from mapreduceinfrastructure_spark.operators.graph import star_contraction
 from mapreduceinfrastructure_spark.operators.mapreduce import wordcount_map
 
 # text over the delimiter class + word chars, incl. consecutive delims
@@ -86,6 +89,9 @@ def test_rows_only_queries_are_deterministic(spark, sf_dir):
 # hypothesis-random input, not just the fixed test corpus.
 
 
+@pytest.mark.parametrize(
+    "cc", [connected_components, star_contraction], ids=lambda f: f.__name__
+)
 @given(
     st.lists(
         st.tuples(st.integers(0, 15), st.integers(0, 15)),
@@ -99,12 +105,13 @@ def test_rows_only_queries_are_deterministic(spark, sf_dir):
 @example(raw_edges=[(i, i + 1) for i in range(15)])
 # duplicate and reversed edges: a multigraph
 @example(raw_edges=[(3, 5), (5, 3), (3, 5), (5, 9), (9, 5), (1, 2), (2, 1)])
+# already a star forest rooted at each minimum: star_contraction's
+# probe is 0 at the build
+@example(raw_edges=[(0, 4), (0, 9), (0, 2), (3, 7), (3, 12)])
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-def test_connected_components_matches_union_find(spark, raw_edges):
-    """connected_components == union-find min-labels on random graphs
+def test_connected_components_matches_union_find(spark, cc, raw_edges):
+    """Both CC algorithms == union-find min-labels on random graphs
     (chains, cycles, stars, multi-edges, disconnected nodes)."""
-    from mapreduceinfrastructure_spark.operators.dedup import connected_components
-
     edges = [(a, b) for a, b in raw_edges if a != b]
     if not edges:
         return
@@ -131,9 +138,7 @@ def test_connected_components_matches_union_find(spark, raw_edges):
 
     sym = edges + [(b, a) for a, b in edges]
     df = spark.createDataFrame(sym, "a long, b long")
-    got = {
-        r["node"]: r["label"] for r in connected_components(df).collect()
-    }
+    got = {r["node"]: r["label"] for r in cc(df).collect()}
     assert got == want
 
 
