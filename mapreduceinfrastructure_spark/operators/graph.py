@@ -7,11 +7,13 @@ Graph here: the international trade network — a weighted directed edge
 supplier_nation → customer_nation for every lineitem, weight = line
 count.  25 nodes, realistic asymmetric weights.
 
-Scale notes: each PageRank iteration is one join (ranks ⋈ edges on src)
-+ one hash-agg on dst — the edge table is partitioned+persisted once on
-the join key, so per-iteration shuffle volume is only the rank vector
-(|V| rows).  Convergence is fixed-iteration (10), the standard batch
-choice; dangling mass is redistributed uniformly each round.
+Scale notes: every iterative algorithm here runs its rounds on
+:func:`~..operators.dedup._rounds`, one eager localCheckpoint per
+round with its probes observed on it.  A PageRank iteration over the
+adjacency state is one explode + one hash-agg on the target node, so no
+edge table is joined or re-read per round.  Convergence is
+fixed-iteration (10), the standard batch choice; dangling mass is
+redistributed uniformly each round.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .dedup import _fixpoint, neardup_edges
+from .dedup import _fixpoint, _release_checkpoint, _rounds, neardup_edges
 
 DAMPING = 0.85
 ITERATIONS = 10
@@ -44,87 +46,90 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pagerank(edges: DataFrame, iterations: int) -> DataFrame:
+    """(node, rank): weighted PageRank (d = DAMPING, ``iterations``
+    rounds from rank 1/n) over the directed edges (src, dst, w), every
+    endpoint a node, p = w / out_w.  Dangling mass (nodes with no
+    out-edge) is redistributed uniformly.
+
+    Rounds run on :func:`~..operators.dedup._rounds` over an adjacency
+    state (node, out: array<struct<v, p>>, rank).  The build is one
+    groupBy(node) over both edge endpoints (a node with no out-edge
+    gets an empty ``out``); it has no rank yet, and its observed
+    count(*) gives n.  Each later round is one explode + one groupBy:
+    every node sends p·rank to each out-neighbor and a self row
+    carrying ``out``.  The dangling mass, sum(rank) over nodes with an
+    empty ``out``, is observed on round r and enters round r+1 as a
+    literal, so no edge table is joined or re-read per round.
+    """
+    # one row per (node, out-edge or NULL): a dst endpoint gets a NULL
+    # edge, so a node with no out-edge still keeps its (empty) row
+    ends = F.array(
+        F.struct(
+            F.col("src").alias("node"), F.struct(F.col("dst").alias("v"), "w").alias("e")
+        ),
+        F.struct(F.col("dst").alias("node"), F.lit(None).alias("e")),
+    )
+    build = (
+        edges.select(F.inline(ends))
+        .groupBy("node")
+        .agg(F.collect_list("e").alias("out"), F.sum("e.w").alias("out_w"))
+        .select(
+            "node",
+            F.transform(
+                "out", lambda x: F.struct(x["v"], (x["w"] / F.col("out_w")).alias("p"))
+            ).alias("out"),
+            F.lit(None).cast("double").alias("rank"),
+        )
+    )
+    dangling = F.size("out") == 0
+    observe = {
+        "n": F.count("*"),
+        "nd": F.count_if(dangling),
+        "dm": F.sum(F.when(dangling, F.col("rank"))),
+    }
+    n, dm = 0, 0.0
+
+    def step(state: DataFrame, _round_no: int) -> DataFrame:
+        # one row per (target, sender); the self row sends no rank and
+        # is the only one that keeps out
+        me = F.struct(F.col("node").alias("v"), F.lit(0.0).alias("p"))
+        msgs = state.select(
+            F.explode(F.concat(F.array(me), "out")).alias("m"),
+            F.col("node").alias("src"),
+            "out",
+            F.coalesce("rank", F.lit(1.0 / n)).alias("rank"),
+        )
+        is_self = F.col("m.v") == F.col("src")
+        return msgs.groupBy(F.col("m.v").alias("node")).agg(
+            F.first(F.when(is_self, F.col("out")), ignorenulls=True).alias("out"),
+            (
+                F.lit((1.0 - DAMPING) / n)
+                + F.lit(DAMPING) * F.lit(dm) / F.lit(float(n))
+                + F.lit(DAMPING) * F.sum(F.col("m.p") * F.col("rank"))
+            ).alias("rank"),
+        )
+
+    cols = ["node", "out", "rank"]
+    for round_no, ranks, seen in _rounds(build, step, cols, observe):
+        n = seen["n"]
+        if n == 0 or round_no == iterations:
+            break
+        # the build has no rank yet: every dangling node holds 1/n
+        dm = (seen["dm"] if round_no else seen["nd"] / n) or 0.0
+    return ranks.select("node", "rank")
+
+
 def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the nation trade graph (10 iterations,
-    d=0.85).  Oracle-verified: the DuckDB twin unrolls the same 10
-    iterations (__spark_entry__._pagerank_sql) and the driver
-    hash-gates the rounded ranks; invariants (sum(rank)=1, positivity,
-    determinism) are additionally pytest-pinned."""
-    # the edge table feeds trans, out_w, nodes AND the dangling-set prep
-    # — persist it once so the 4-table join pipeline runs a single time.
-    edges = trade_edges(spark, sf_dir).persist()
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    # transition probability per edge, partitioned once on the join key.
-    # Partition count scales with the edge table (~100k edges/partition,
-    # capped at the session default): a 625-edge graph iterates in
-    # 1-task stages instead of shuffle_partitions-task stages, while a
-    # billion-edge graph still shards across the cluster.
-    n_parts = max(
-        1, min(spark.sparkContext.defaultParallelism, edges.count() // 100_000 + 1)
-    )
-    trans = (
-        edges.join(out_w, "src")
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
-        .repartition(n_parts, "src")
-        .persist()
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:  # empty graph: empty result, stable schema
-        nation = load_table(spark, sf_dir, "nation")
-        return (
-            nodes.join(nation, nodes.node == nation.n_nationkey)
-            .select("node", "n_name", F.lit(0.0).alias("rank"))
-        )
-    # the dangling-node SET is static — resolve and persist it once;
-    # otherwise the per-iteration dangling-mass join re-derives the
-    # whole edge pipeline every round (out_w has no persisted lineage).
-    dangling_nodes = nodes.join(out_w, nodes.node == out_w.src, "left_anti").persist()
-    dangling_nodes.count()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    for _ in range(ITERATIONS):
-        # each iteration references `ranks` twice (contribs + dangling);
-        # without truncation the lazy plan doubles per round (2^k nodes).
-        # localCheckpoint materializes the tiny rank vector and cuts the
-        # lineage — the standard move for iterative dataflows.  The rank
-        # vector is |V| rows: coalesce(1) first so each checkpoint job
-        # runs 1 task, not shuffle_partitions tasks (at billion-node
-        # scale drop the coalesce — the vector is then worth sharding).
-        ranks = ranks.coalesce(1).localCheckpoint(eager=True)
-        contribs = (
-            trans.join(ranks, trans.src == ranks.node)
-            .select("dst", (F.col("p") * F.col("rank")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        # dangling (no-out-edge) mass, kept lazy as a 1-row broadcast —
-        # a driver-side action here would re-execute the rank lineage an
-        # extra time per iteration.  Joins the precomputed static set.
-        dangling = (
-            ranks.join(F.broadcast(dangling_nodes), "node", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - DAMPING) / n_nodes)
-                    + F.lit(DAMPING) * F.col("dm") / F.lit(float(n_nodes))
-                    + F.lit(DAMPING) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
+    d=0.85) by :func:`_pagerank`.  Oracle-verified: the DuckDB twin
+    unrolls the same 10 iterations (__spark_entry__._pagerank_sql) and
+    the driver hash-gates the rounded ranks; invariants (sum(rank)=1,
+    positivity, determinism) are additionally pytest-pinned."""
+    ranks = _pagerank(trade_edges(spark, sf_dir), ITERATIONS)
     nation = load_table(spark, sf_dir, "nation")
-    return (
-        ranks.join(F.broadcast(nation), ranks.node == nation.n_nationkey)
-        .select("node", "n_name", F.round("rank", 6).alias("rank"))
+    return ranks.join(F.broadcast(nation), ranks.node == nation.n_nationkey).select(
+        "node", "n_name", F.round("rank", 6).alias("rank")
     )
 
 
@@ -251,6 +256,22 @@ def label_prop_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _adjacency(e: DataFrame, a: str, b: str, *vals: str) -> DataFrame:
+    """(node, nbrs) over the undirected edges (a, b, *vals): every edge
+    in both orientations, one groupBy(node).  ``nbrs`` lists neighbor
+    ids, or (v, *vals) structs when edge values are named."""
+    both = e.select(
+        F.inline(
+            F.array(
+                F.struct(F.col(a).alias("node"), F.col(b).alias("v"), *vals),
+                F.struct(F.col(b).alias("node"), F.col(a).alias("v"), *vals),
+            )
+        )
+    )
+    nbr = F.struct("v", *vals) if vals else F.col("v")
+    return both.groupBy("node").agg(F.collect_list(nbr).alias("nbrs"))
+
+
 # Iterations for label_prop_iterate's convergence curve.
 LPA_ITERS = 4
 
@@ -267,76 +288,71 @@ def label_prop_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectory is hash-gated against a DuckDB oracle that unrolls the
     same recurrence (__spark_entry__._lpa_sql).
 
-    Scale shape per iteration: one edge⋈labels shuffle join keyed on
-    src, the two algebraic aggs of label_prop_step (map-side
-    partials), then localCheckpoint on the new (node, lbl) table —
-    the labels table is node-sized (not edge-sized) and checkpointing
-    truncates the otherwise-growing lineage, the standard iterative-
-    graph pattern (same reason dedup's CC persists between pointer-
-    jumping rounds).  The three curve scalars are 1-row aggregates;
-    no per-node rows reach the driver.
+    Rounds run on :func:`~..operators.dedup._rounds` over an adjacency
+    state (node, nbrs: array<struct<v, w>>, lbl, prev), built by one
+    groupBy over the symmetrized edges.  A round sends each node's
+    label with the edge weight to every neighbor plus a self row
+    carrying ``nbrs`` and the old label, then runs the two algebraic
+    aggs of label_prop_step (map-side partials): per (node, candidate
+    label) weight sums, then the argmax-with-tiebreak per node.
+    n_changed = count_if(lbl != prev) is observed on the round's
+    checkpoint; n_communities needs a DISTINCT, which an observation
+    cannot hold, so one per-label rollup collect per round gives it
+    and the largest community.  No per-node rows reach the driver.
     """
-    e = trade_edges(spark, sf_dir)
-    und = (
-        e.select("src", "dst", "w")
-        .union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
-        .persist()
+    build = _adjacency(trade_edges(spark, sf_dir), "src", "dst", "w").select(
+        "node", "nbrs", F.col("node").alias("lbl"), F.lit(None).cast("long").alias("prev")
     )
-    nodes = und.select(F.col("dst").alias("node")).distinct()
-    # LAZY (r17 job-cadence): the emptiness probe below materializes it.
-    labels = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint(
-        eager=False
-    )
+
+    def step(state: DataFrame, _round_no: int) -> DataFrame:
+        # one row per (target, sender); the self row has no weight and
+        # is the only one that keeps nbrs/prev
+        me = F.struct(F.col("node").alias("v"), F.lit(None).cast("long").alias("w"))
+        msgs = state.select(
+            F.explode(F.concat(F.array(me), "nbrs")).alias("m"),
+            F.col("node").alias("src"),
+            "nbrs",
+            "lbl",
+        )
+        is_self = F.col("m.v") == F.col("src")
+        by_cand = msgs.groupBy(F.col("m.v").alias("node"), F.col("lbl").alias("cand"))
+        cand = by_cand.agg(
+            F.sum("m.w").alias("wsum"),
+            F.first(F.when(is_self, F.col("nbrs")), ignorenulls=True).alias("nbrs"),
+            F.max(F.when(is_self, F.col("lbl"))).alias("prev"),
+        )
+        # a (node, own label) group fed by the self row alone is no candidate
+        best = F.max(
+            F.when(
+                F.col("wsum").isNotNull(),
+                F.struct("wsum", (-F.col("cand")).alias("nl")),
+            )
+        )
+        return cand.groupBy("node").agg(
+            F.first("nbrs", ignorenulls=True).alias("nbrs"),
+            (-best["nl"]).alias("lbl"),
+            F.max("prev").alias("prev"),
+        )
+
     schema = (
         "iteration long, n_changed long, n_communities long, "
         "largest_community long"
     )
-    if labels.limit(1).count() == 0:  # empty graph: empty curve, stable schema
-        und.unpersist()
-        return spark.createDataFrame([], schema=schema)
     curve = []
-    best = F.max(F.struct(F.col("wsum").alias("ws"), (-F.col("lbl")).alias("nl")))
-    for it in range(1, LPA_ITERS + 1):
-        cand = (
-            und.join(labels.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"), "lbl")
-            .agg(F.sum("w").alias("wsum"))
-        )
-        new_labels = (
-            cand.groupBy("node")
-            .agg(best.alias("b"))
-            .select("node", (-F.col("b.nl")).alias("lbl"))
-            # LAZY (r17 job-cadence): the fused curve probe below is
-            # the round's materializing action; next round reads the
-            # blocks it stores.
-            .localCheckpoint(eager=False)
-        )
-        # ONE probe per round (r17): the former shape ran THREE driver
-        # jobs per round (eager checkpoint + changed/communities agg +
-        # a separate largest-community agg).  All three curve scalars
-        # derive from one per-label rollup of the same joined frame:
-        # n_changed = Σ per-label changed counts, n_communities = the
-        # rollup's row count (every new_labels row joins — the label
-        # table covers every node of the symmetric edge set), largest
-        # = max per-label size.  Integers, same values, one collect.
-        per_lbl = (
-            new_labels.join(labels.withColumnRenamed("lbl", "prev"), "node")
-            .groupBy("lbl")
-            .agg(
-                F.count("*").alias("sz"),
-                F.sum((F.col("lbl") != F.col("prev")).cast("long")).alias("ch"),
+    observe = {"n": F.count("*"), "changed": F.count_if(F.col("lbl") != F.col("prev"))}
+    cols = ["node", "nbrs", "lbl", "prev"]
+    for it, labels, seen in _rounds(build, step, cols, observe):
+        if it:
+            row = (
+                labels.groupBy("lbl")
+                .agg(F.count("*").alias("sz"))
+                .agg(F.count("*").alias("nc"), F.max("sz").alias("m"))
+                .collect()[0]
             )
-        )
-        row = per_lbl.agg(
-            F.sum("ch").alias("ch"),
-            F.count("*").alias("nc"),
-            F.max("sz").alias("m"),
-        ).collect()[0]
-        curve.append((it, int(row["ch"]), int(row["nc"]), int(row["m"])))
-        labels = new_labels
-    und.unpersist()
-    if not curve:  # pragma: no cover - LPA_ITERS is a positive constant
-        return spark.createDataFrame([], schema=schema)
+            curve.append((it, seen["changed"], int(row["nc"]), int(row["m"])))
+        if seen["n"] == 0 or it == LPA_ITERS:
+            break
+    _release_checkpoint(labels)
     return spark.createDataFrame(curve, schema=schema)
 
 
@@ -366,18 +382,16 @@ def pagerank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank_nations vanishes: r' = (1-d)/n + d * Σ_in p·r with
     p = w / out_w.
 
-    Scale shape: the pair computation runs ONCE and is checkpointed —
-    via :func:`~..operators.dedup.ppjoin_neardup`, whose length +
+    Scale shape: pairs come from
+    :func:`~..operators.dedup.ppjoin_neardup`, whose length +
     positional filters produce the IDENTICAL pair set to
     prefix_filter_neardup (both lossless — the driver gate on each
     proves it) from strictly fewer candidates (measured: the swap cut
-    this query's pair-generation stage by the full VCL-vs-PPJoin gap);
-    each iteration is one rank⋈trans join keyed on src plus one dst
-    agg, shuffling only the |V|-row rank vector; every-other-round
-    localCheckpoint truncates the doubling lineage (the
-    pagerank_nations pattern, with alternate rounds carrying one
-    extra join in-plan to halve the checkpoint-job count).  No driver
-    traffic beyond the one n_nodes scalar.
+    this query's pair-generation stage by the full VCL-vs-PPJoin gap).
+    They are checkpointed once, read by :func:`_pagerank`'s adjacency
+    build and released after it; each round is one explode + one
+    node-keyed agg over the |V|-row adjacency state.  With no dangling
+    node the dangling term adds exactly 0.0.
     """
     from .dedup import ppjoin_pairs_raw
 
@@ -385,77 +399,16 @@ def pagerank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uses the raw ratio, and round(jaccard, 6) on only the Spark side
     # was a ~1e-6-relative weight divergence — larger than the ~1e-14
     # summation drift the final round(rank, 6) is sized to absorb.
+    w = F.col("j").alias("w")
+    both_ways = F.array(
+        F.struct(F.col("da").alias("src"), F.col("db").alias("dst"), w),
+        F.struct(F.col("db").alias("src"), F.col("da").alias("dst"), w),
+    )
+    # eager, not fused into the build: fused, the query measured ~0.1 s
+    # slower at sf0.1 (4 vCPUs, local[4], interleaved warm runs)
     pairs = ppjoin_pairs_raw(spark, sf_dir).localCheckpoint(eager=True)
-    und = pairs.select(
-        F.col("da").alias("src"), F.col("db").alias("dst"), F.col("j").alias("w")
-    ).union(
-        pairs.select(
-            F.col("db").alias("src"), F.col("da").alias("dst"),
-            F.col("j").alias("w"),
-        )
-    )
-    out_w = und.groupBy("src").agg(F.sum("w").alias("out_w"))
-    trans = (
-        und.join(out_w, "src")
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
-        .localCheckpoint(eager=True)
-    )
-    # nodes derives from the MATERIALIZED trans (distinct src — the
-    # graph is undirected so src covers every node), not from und:
-    # the und lineage would re-run the pair scan for the count job,
-    # and nodes is only read twice now (initial ranks + this count) —
-    # both cheap over the checkpointed edge table (r10 setup shave).
-    nodes = trans.select(F.col("src").alias("node")).distinct()
-    n_nodes = nodes.count()
-    if n_nodes == 0:  # no near-dup pairs: empty graph, stable schema
-        return spark.createDataFrame([], schema="doc_id long, rank double")
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    # The rank vector is |V|-row and candidate-pair-bounded; broadcast
-    # it into the per-round join while it plausibly fits in a task
-    # broadcast (the r10 cut: no rank-vector shuffle per round), fall
-    # back to the shuffle join past the gate — the plan survives a
-    # billion-node graph, the broadcast just stops being chosen.
-    _bcast_ranks = n_nodes <= 10_000_000
-    for it in range(PR_DOC_ITERS):
-        # |V| is candidate-pair-bounded (tiny next to the corpus):
-        # coalesce(1) keeps each checkpoint job at one task, as in
-        # pagerank_nations (drop it at billion-node scale).  Checkpoint
-        # every OTHER round: each skipped checkpoint saves one driver
-        # job, and a 2-round lineage is one extra join+agg in the plan
-        # — the doubling that motivates per-round truncation only bites
-        # past that (measured: ~0.4 s off the 5-round trajectory at
-        # sf0.1 with identical output).
-        if it % 2 == 0:
-            # LAZY since r17 (job-cadence): the checkpoint still
-            # rebases the plan on an RDD (bounding the per-round plan
-            # exactly as before), but the blocks now materialize inside
-            # the round's own broadcast build / the final action
-            # instead of a dedicated driver job per checkpointed round
-            # — the rank vector has exactly one downstream consumer
-            # per round, so nothing reads it twice.
-            ranks = ranks.coalesce(1).localCheckpoint(eager=False)
-        # No dangling-mass term AND no per-round nodes join: the graph
-        # is undirected, so every node in `nodes` has at least one
-        # in-edge and the dst-keyed inflow agg already covers the full
-        # node set — the former nodes-left-join + coalesce(inflow, 0)
-        # was a per-round no-op join (r10: verified row-identical,
-        # ~0.3 s off the 5-round trajectory at sf0.1).
-        ranks = (
-            trans.join(
-                F.broadcast(ranks) if _bcast_ranks else ranks,
-                trans.src == ranks.node,
-            )
-            .select("dst", (F.col("p") * F.col("rank")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-            .select(
-                F.col("dst").alias("node"),
-                (
-                    F.lit((1.0 - DAMPING) / n_nodes)
-                    + F.lit(DAMPING) * F.col("inflow")
-                ).alias("rank"),
-            )
-        )
+    ranks = _pagerank(pairs.select(F.inline(both_ways)), PR_DOC_ITERS)
+    _release_checkpoint(pairs)
     return ranks.select(
         F.col("node").cast("long").alias("doc_id"),
         F.round("rank", 6).alias("rank"),
@@ -682,66 +635,77 @@ def sssp_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Nodes unreached within SSSP_ROUNDS hops are absent (both engines
     derive the same reachable set).  Bellman-Ford's synchronous
-    min-merge is idempotent past convergence, so the fixed round
-    count is exact whether or not the fixpoint was hit earlier.
+    min-merge is idempotent past convergence, so stopping at the first
+    round that changes no distance gives the rows of the full
+    SSSP_ROUNDS.
 
-    Scale shape per round: one dist⋈edges join keyed on the relaxed
-    endpoint + one node-keyed min agg — the rank-vector-sized state
-    shuffles, never the corpus; localCheckpoint truncates the
-    iterative lineage (dist is |V|-bounded).  The symmetrized edge
-    table is checkpointed once.
+    Rounds run on :func:`~..operators.dedup._rounds` over an adjacency
+    state (node, nbrs: array<struct<v, w>>, dist, old), built by one
+    groupBy over the symmetrized edges.  The build's observed max
+    weight and max_by degree pick give the cost literal and the
+    source.  A round is one explode + one groupBy(node): each reached
+    node sends dist + cost to every neighbor, and a self row keeps
+    nbrs and old = dist; the probe is count_if(dist IS NOT NULL AND
+    (old IS NULL OR dist < old)).  The state is |V|-bounded, never the
+    corpus.
     """
-    e = copurchase_weighted(spark, sf_dir)
-    max_w = e.agg(F.max("w")).collect()[0][0]
-    if max_w is None:  # empty graph: stable empty schema
-        return spark.createDataFrame([], schema="node long, dist long")
-    cost = (F.lit(int(max_w) + 1) - F.col("w")).alias("c")
-    und = (
-        e.select(F.col("pa").alias("u"), F.col("pb").alias("v"), cost)
-        .union(e.select(F.col("pb").alias("u"), F.col("pa").alias("v"), cost))
-        # LAZY (r17 job-cadence): the source-pick agg right below is
-        # the materializing action; the relaxation rounds then read
-        # the stored blocks.
-        .localCheckpoint(eager=False)
+    build = _adjacency(copurchase_weighted(spark, sf_dir), "pa", "pb", "w").select(
+        "node",
+        "nbrs",
+        F.lit(None).cast("long").alias("dist"),
+        F.lit(None).cast("long").alias("old"),
     )
-    # scalar composite key d·10^12 − u == lexicographic (d, −u) for
-    # node ids < 10^12 — DuckDB's arg_max takes no struct keys, so
-    # both engines use the identical integer expression
-    src = (
-        und.groupBy("u")
-        .agg(F.count("*").alias("d"))
-        .agg(F.max_by("u", F.col("d") * F.lit(1_000_000_000_000) - F.col("u")))
-        .collect()[0][0]
+    observe = {
+        "max_w": F.max(F.array_max(F.transform("nbrs", lambda x: x["w"]))),
+        # scalar composite key d·10^12 − u == lexicographic (d, −u) for
+        # node ids < 10^12 — DuckDB's arg_max takes no struct keys, so
+        # both engines use the identical integer expression
+        "src": F.max_by(
+            "node",
+            F.size("nbrs").cast("long") * F.lit(1_000_000_000_000) - F.col("node"),
+        ),
+        "changed": F.count_if(
+            F.col("dist").isNotNull()
+            & (F.col("old").isNull() | (F.col("dist") < F.col("old")))
+        ),
+    }
+    source = max_w = None
+
+    def relax(state: DataFrame, _round_no: int) -> DataFrame:
+        # the build has no distances yet: the source starts at 0
+        d0 = F.coalesce(
+            "dist", F.when(F.col("node") == F.lit(source), F.lit(0).cast("long"))
+        )
+        me = F.array(F.struct(F.col("node").alias("v"), F.lit(0).cast("long").alias("c")))
+        sent = F.transform(
+            "nbrs",
+            lambda x: F.struct(x["v"], (F.lit(max_w + 1) - x["w"]).alias("c")),
+        )
+        # one row per (target, sender), unreached nodes send none; only
+        # the self row keeps nbrs/old
+        msgs = state.select(
+            F.explode(F.when(d0.isNull(), me).otherwise(F.concat(me, sent))).alias("m"),
+            F.col("node").alias("src"),
+            "nbrs",
+            d0.alias("d0"),
+        )
+        is_self = F.col("m.v") == F.col("src")
+        return msgs.groupBy(F.col("m.v").alias("node")).agg(
+            F.first(F.when(is_self, F.col("nbrs")), ignorenulls=True).alias("nbrs"),
+            F.min(F.col("d0") + F.col("m.c")).alias("dist"),
+            F.max(F.when(is_self, F.col("d0"))).alias("old"),
+        )
+
+    cols = ["node", "nbrs", "dist", "old"]
+    for round_no, dist, seen in _rounds(build, relax, cols, observe):
+        if seen["max_w"] is None:  # empty graph: stable empty schema
+            break
+        source, max_w = seen["src"], int(seen["max_w"])
+        if round_no == SSSP_ROUNDS or (round_no and seen["changed"] == 0):
+            break
+    return dist.filter(F.col("dist").isNotNull()).select(
+        F.col("node").cast("long").alias("node"), "dist"
     )
-    dist = spark.createDataFrame(
-        [(int(src), 0)], schema="node long, dist long"
-    ).localCheckpoint(eager=True)
-    for _ in range(SSSP_ROUNDS):
-        relaxed = (
-            dist.join(und, dist.node == und.u)
-            .select(F.col("v").alias("node"), (F.col("dist") + F.col("c")).alias("dist"))
-        )
-        dist = (
-            dist.union(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .coalesce(1)
-            # LAZY (r17 job-cadence): no per-round probe exists here —
-            # the chain of 1-partition checkpoint RDDs materializes
-            # inside the consumer's single action, caching each round's
-            # blocks as it goes, instead of paying SSSP_ROUNDS
-            # dedicated driver jobs.  The plan stays round-bounded
-            # (localCheckpoint rebases on an RDD immediately).
-            # ADVICE r17 fault-tolerance note: the whole round chain
-            # now lives inside one consumer job, so a mid-job executor
-            # loss hits localCheckpoint's "checkpoint block not found"
-            # across the chain (lineage truncated, no recompute) —
-            # acceptable under local[N]; a cluster deployment should
-            # re-introduce periodic EAGER checkpoints (every k rounds)
-            # or reliable checkpointing as the documented escape hatch.
-            .localCheckpoint(eager=False)
-        )
-    return dist
 
 
 def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -758,70 +722,49 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A node "remains" iff it still has a surviving edge (an isolated
     keep-node contributes no edge and exits the count) — the same
-    frame both engines derive from the edge set alone, so no separate
-    node-state table is carried.
+    frame both engines derive from the edge set alone.
 
-    Scale shape per round: one degree agg over the (2 x edges)
-    symmetrized endpoint stream (map-side partials), two keyed
-    semi-joins to drop dead-endpoint edges, localCheckpoint to
-    truncate the shrinking edge set's lineage (the iterative-graph
-    pattern of label_prop_iterate), and ONE 2-scalar collect for the
-    trajectory row.  TWO driver actions per round (the edge
-    checkpoint + the trajectory collect — VERDICT r8 #5 cut the
-    former third): the degree table itself carries both counts
-    (n_nodes = its row count, since "remains" means "has a surviving
-    edge"; n_edges = Σd/2), and it is persisted so the trajectory
-    agg and the NEXT round's keep-filter read one materialization
-    instead of recomputing.  Converged rounds are padded without
-    recompute: once n_removed = 0 the edge set is a fixpoint by
-    construction (edges only ever leave when a node does).
+    Rounds run on :func:`~..operators.dedup._rounds` over an adjacency
+    state (node, nbrs), built by one groupBy over both edge
+    orientations, so a node with no edge has no row.  A round is one
+    explode + one groupBy(node): every alive node (size(nbrs) >=
+    KCORE_K) sends itself to its neighbors and a self row to itself,
+    and a node stays iff it sent its self row and heard from at least
+    one alive neighbor.  Both trajectory counts are observed on the
+    round's checkpoint: n_nodes = count(*), n_edges = sum(size(nbrs))
+    / 2.  Converged rounds are padded without recompute: once
+    n_removed = 0 the edge set is a fixpoint by construction (edges
+    only ever leave when a node does).
     """
-    edges = copurchase_edges(spark, sf_dir).localCheckpoint()
+    build = _adjacency(copurchase_edges(spark, sf_dir), "pa", "pb")
 
-    def _degree(e: DataFrame) -> DataFrame:
+    def peel(state: DataFrame, _round_no: int) -> DataFrame:
+        msgs = state.filter(F.size("nbrs") >= KCORE_K).select(
+            F.explode(F.concat(F.array("node"), "nbrs")).alias("node"),
+            F.col("node").alias("src"),
+        )
+        is_self = F.col("node") == F.col("src")
         return (
-            e.select(F.col("pa").alias("n"))
-            .union(e.select(F.col("pb").alias("n")))
-            .groupBy("n")
-            .agg(F.count("*").alias("d"))
+            msgs.groupBy("node")
+            .agg(
+                F.collect_list(F.when(~is_self, F.col("src"))).alias("nbrs"),
+                F.max(is_self).alias("alive"),
+            )
+            .filter(F.col("alive") & (F.size("nbrs") > 0))
         )
 
-    def _stats(deg: DataFrame) -> tuple[int, int]:
-        row = deg.agg(
-            F.count("*").alias("nodes"), F.sum("d").alias("dd")
-        ).collect()[0]
-        return int(row["nodes"]), int(row["dd"] or 0) // 2
-
-    deg = _degree(edges).persist()
-    n_prev, _ = _stats(deg)
+    observe = {"n": F.count("*"), "dd": F.sum(F.size("nbrs"))}
     rows: list[tuple[int, int, int, int]] = []
-    for it in range(1, KCORE_ROUNDS + 1):
-        if rows and rows[-1][1] == 0:  # fixpoint: pad without recompute
-            rows.append((it, 0, rows[-1][2], rows[-1][3]))
-            continue
-        keep = deg.filter(F.col("d") >= KCORE_K).select("n")
-        # LAZY checkpoint (r17, guide §2.6/§7 job-cadence): the stats
-        # collect right below is the round's materializing action — an
-        # eager checkpoint here ran a SECOND driver job per round for
-        # the same blocks (two cluster barriers where one suffices;
-        # measured at sf0.1: 2.46 -> 1.9 s min, same-window interleaved
-        # A/B).  The plan is truncated either way (localCheckpoint
-        # rebases the frame on an RDD immediately; eager only changes
-        # WHEN the blocks materialize), and the next round's two
-        # semi-joins read the blocks the collect stored.
-        edges = (
-            edges.join(keep.withColumnRenamed("n", "pa"), "pa", "left_semi")
-            .join(keep.withColumnRenamed("n", "pb"), "pb", "left_semi")
-            .select("pa", "pb")
-            .localCheckpoint(eager=False)
-        )
-        deg_new = _degree(edges).persist()
-        n_nodes, n_edges = _stats(deg_new)
-        deg.unpersist()
-        deg = deg_new
-        rows.append((it, n_prev - n_nodes, n_nodes, n_edges))
+    for it, state, seen in _rounds(build, peel, ["node", "nbrs"], observe):
+        n_nodes, n_edges = seen["n"], int(seen["dd"] or 0) // 2
+        if it:
+            rows.append((it, n_prev - n_nodes, n_nodes, n_edges))
         n_prev = n_nodes
-    deg.unpersist()
+        if it == KCORE_ROUNDS or (rows and rows[-1][1] == 0):
+            break
+    _release_checkpoint(state)
+    while len(rows) < KCORE_ROUNDS:  # fixpoint: pad without recompute
+        rows.append((len(rows) + 1, 0, rows[-1][2], rows[-1][3]))
     return spark.createDataFrame(
         rows, schema="iteration long, n_removed long, n_nodes long, n_edges long"
     )

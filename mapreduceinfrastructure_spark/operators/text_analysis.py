@@ -29,6 +29,7 @@ from .dedup import (
     _input_bytes,
     _persist_tracked,
     _release_checkpoint,
+    _rounds,
 )
 
 # Tiny embedded English stopword list used by the language-ID heuristic
@@ -378,12 +379,13 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainer's word-frequency preprocessing.  Per round: adjacent
     symbol-pair counts via zip_with (one vocab-sized hash-agg, weighted
     by word freq), a global argmax (a 1-row collect — the merge decision
-    is an inherently global scalar, same driver-side use as the CC
-    convergence probe), and a leftmost-first non-overlapping merge
-    applied with an ANSI-safe HOF aggregate fold (F.get returns NULL
-    out-of-bounds, no Python in the loop).  Each round's vocab is
-    eagerly localCheckpoint'ed so plans stay constant-size across
-    iterations, and releases the previous round's blocks.
+    is an inherently global scalar, picked on the driver between
+    rounds), and a leftmost-first non-overlapping merge applied with an
+    ANSI-safe HOF aggregate fold (F.get returns NULL out-of-bounds, no
+    Python in the loop).  The fold is the round step of
+    :func:`~..operators.dedup._rounds`, so each round's vocab is one
+    eager localCheckpoint (plans stay constant-size across iterations)
+    and the previous round's blocks are released.
 
     Ties break on (count desc, left asc, right asc) — fully
     deterministic.  Verified two ways: against a pure-Python reference
@@ -394,40 +396,19 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     match positions) — so the op is no longer rows-only.
     """
     toks = _docs_tokens(spark, sf_dir)
-    vocab = (
+    build = (
         toks.select(F.explode("tokens").alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
         .select(F.expr("split(word, '')").alias("s"), "freq")
-        .localCheckpoint(eager=True)
     )
     pair_struct = "array<struct<l:string,r:string>>"
     merges: list[tuple[int, str, str, int]] = []
-    for rank in range(BPE_NUM_MERGES):
-        pairs = (
-            vocab.select(
-                "freq",
-                F.explode(
-                    F.when(
-                        F.size("s") >= 2,
-                        F.zip_with(
-                            F.slice("s", 1, F.size("s") - 1),
-                            F.slice("s", 2, F.size("s") - 1),
-                            lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                        ),
-                    ).otherwise(F.array().cast(pair_struct))
-                ).alias("p"),
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        best = pairs.orderBy(F.desc("cnt"), "l", "r").limit(1).collect()
-        if not best or best[0]["cnt"] < BPE_MIN_PAIR:
-            break
-        left, right, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
-        merges.append((rank, left, right, cnt))
+
+    def fold(vocab: DataFrame, _round_no: int) -> DataFrame:
+        _, left, right, _ = merges[-1]
         tok = left + right
-        fold = F.aggregate(
+        merged = F.aggregate(
             F.sequence(F.lit(0), F.size("s") - 1),
             F.struct(
                 F.array().cast("array<string>").alias("out"),
@@ -454,11 +435,32 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         )
-        new_vocab = vocab.select(fold["out"].alias("s"), "freq").localCheckpoint(
-            eager=True
+        return vocab.select(merged["out"].alias("s"), "freq")
+
+    for rank, vocab, _ in _rounds(build, fold, ["s", "freq"]):
+        pairs = (
+            vocab.select(
+                "freq",
+                F.explode(
+                    F.when(
+                        F.size("s") >= 2,
+                        F.zip_with(
+                            F.slice("s", 1, F.size("s") - 1),
+                            F.slice("s", 2, F.size("s") - 1),
+                            lambda a, b: F.struct(a.alias("l"), b.alias("r")),
+                        ),
+                    ).otherwise(F.array().cast(pair_struct))
+                ).alias("p"),
+            )
+            .groupBy("p.l", "p.r")
+            .agg(F.sum("freq").alias("cnt"))
         )
-        _release_checkpoint(vocab)
-        vocab = new_vocab
+        best = pairs.orderBy(F.desc("cnt"), "l", "r").limit(1).collect()
+        if not best or best[0]["cnt"] < BPE_MIN_PAIR:
+            break
+        merges.append((rank, best[0]["l"], best[0]["r"], int(best[0]["cnt"])))
+        if len(merges) == BPE_NUM_MERGES:
+            break
     _release_checkpoint(vocab)
     return spark.createDataFrame(
         merges, schema="rank long, left string, right string, pair_count long"

@@ -24,7 +24,13 @@ def spark():
         app_name="mri-spark-tests",
         cpus=TEST_CPUS,
         shuffle_partitions=TEST_CPUS,
-        extra_conf={"spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="mri_wh_")},
+        extra_conf={
+            "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="mri_wh_"),
+            # under local[N] this JVM is also the executor, and its heap
+            # grows toward session.py's 16g default (a small host's whole
+            # memory) next to pytest's own DuckDB and pandas frames
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"),
+        },
     )
     yield s
     s.stop()

@@ -5,13 +5,24 @@ from __future__ import annotations
 
 import pytest
 
-from mapreduceinfrastructure_spark.operators.dedup import connected_components
+import __spark_entry__ as entrymod
+from mapreduceinfrastructure_spark.operators.dedup import (
+    HOT_SHINGLE_DF_CAP,
+    connected_components,
+    neardup_pairs,
+    ppjoin_pairs_raw,
+)
 from mapreduceinfrastructure_spark.operators.graph import (
+    copurchase_edges,
+    copurchase_weighted,
     pagerank_nations,
     star_contraction,
     trade_edges,
 )
+from mapreduceinfrastructure_spark.operators.text_analysis import _docs_tokens
 from tests.conftest import jobs_in_group
+
+QUERIES = entrymod.queries()
 
 
 def test_trade_graph_shape(spark, sf_dir):
@@ -172,3 +183,63 @@ def test_triangle_degree_orientation_same_result(spark, sf_dir):
         .collect()
     }
     assert got == want
+
+
+def _diameter_pairs(spark, sf_dir):
+    return neardup_pairs(spark, sf_dir, threshold=0.5, df_cap=HOT_SHINGLE_DF_CAP)
+
+
+# The seven frame-state loops on the shared round driver: each one's
+# warm job cap on the test corpus (the count before the driver in the
+# comment) and the input builder whose retained blocks it may keep.
+LOOPS = {
+    "pagerank_nations": (30, trade_edges),  # 67
+    "pagerank_docs": (20, ppjoin_pairs_raw),  # 26
+    "sssp_parts": (17, copurchase_weighted),  # 23
+    "kcore_peel": (20, copurchase_edges),  # 44
+    "label_prop_iterate": (31, trade_edges),  # 39
+    "cluster_diameter": (30, _diameter_pairs),  # 31
+    "bpe_merges": (62, _docs_tokens),  # 63
+}
+
+
+@pytest.mark.parametrize("name", sorted(LOOPS))
+def test_loop_job_cadence(spark, sf_dir, name):
+    """Each loop round is one eager checkpoint with its probes observed
+    on it, so a loop's warm job count follows its rounds; the caps pin
+    the counts on the round driver."""
+    query = QUERIES[name]
+    query(spark, sf_dir).collect()  # warm: schemas, memos, codegen
+    rows, n_jobs = jobs_in_group(
+        spark, f"test-loop-{name}", lambda: query(spark, sf_dir).collect()
+    )
+    assert rows
+    assert n_jobs <= LOOPS[name][0], (name, n_jobs)
+
+
+def _persisted(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+@pytest.mark.parametrize("name", sorted(LOOPS))
+def test_loop_releases_what_it_does_not_return(spark, sf_dir, name):
+    """A loop keeps no blocks beyond the checkpointed frames its result
+    reads (none for the trajectory loops, whose result is built on the
+    driver) and what its input builder keeps when called alone: every
+    round's predecessor, and each input the loop materializes itself,
+    is released explicitly, not left to GC."""
+    before = _persisted(spark)
+    LOOPS[name][1](spark, sf_dir).collect()
+    builder_kept = len(_persisted(spark) - before)
+
+    before = _persisted(spark)
+    out = QUERIES[name](spark, sf_dir)
+    out.collect()
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    read = {
+        leaf.rdd().id()
+        for leaf in map(leaves.apply, range(leaves.size()))
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+    }
+    kept = _persisted(spark) - before - read
+    assert len(kept) <= builder_kept, (name, kept, builder_kept)
