@@ -25,17 +25,20 @@ for finite vectors (and, for the cosine kernel, non-zero norms), and
 the kernels do not check this per batch.  Outside it the two engines
 part ways: np.argmin returns the FIRST NaN's index where the JVM's
 ``array_min`` treats NaN as larger than every number; np.lexsort sorts
-NaN after every number in both the d2 (ascending) and negated-sim
-(descending) selections, while a JVM ``ORDER BY sim DESC`` puts NaN
-first; and a zero-norm row gets a silent 0/0 = NaN cosine from
-``cosine_topk_partials_fn`` (pinned in tests/test_batchmath.py) where
-``cosine_similarity_expr`` raises DIVIDE_BY_ZERO under ANSI.
+NaN after every number in both the ascending and the negated
+(``descending``) selections of ``topk_partials_fn``, while a JVM
+``ORDER BY score DESC`` puts NaN first; and a zero-norm row gets a
+silent 0/0 = NaN cosine from ``cosine_scorer`` (pinned in
+tests/test_batchmath.py) where ``cosine_similarity_expr`` raises
+DIVIDE_BY_ZERO under ANSI.
 
-Every public factory returns a closure fit for ``mapInPandas``.  The
-closures reference this module's helpers (``_stack`` and the fold
-replays), which cloudpickle by reference: unpickling imports this
-package on the worker — installing the lazy zip-cache invalidation
-there (session.install_lazy_zip_invalidation) — so callers must
+Every ``*_fn`` factory returns a closure fit for ``mapInPandas``; the
+``*_scorer`` factories return the per-batch score functions that
+``topk_partials_fn`` takes.  The closures reference this module's
+helpers (``_stack`` and the fold replays), which cloudpickle by
+reference: unpickling imports this package on the worker —
+installing the lazy zip-cache invalidation there
+(session.install_lazy_zip_invalidation) — so callers must
 ``ensure_package_on_executors`` once per session for foreign-cwd
 drivers.
 """
@@ -100,6 +103,10 @@ def pq_train_partials_fn(flat, n_codes: int, n_sub: int, subdim: int):
     per-(code, pos) partial sums + counts — output schema
     ``code int, pos int, s double, c long`` (<= n_codes x dim rows per
     batch; the map-side aggregation guide §2.3 asks for).
+
+    With ``n_sub=1`` and the centroid matrix as the codebook it is the
+    flat IVF Lloyd pass: subspace_d2 at one subspace is full_d2
+    operation for operation, so the assignment is the `_sq_dist` argmin.
     """
     dim = n_sub * subdim
     C = np.asarray(flat, dtype=np.float64).copy()
@@ -177,140 +184,50 @@ def nearest_centroid_fn(cent_ids, cent_vecs):
     return fn
 
 
-def centroid_partials_fn(cent_ids, cent_vecs):
-    """mapInPandas closure for one IVF Lloyd pass: (vec_id, v) ->
-    per-(cid, pos) partial sums + counts (``cid long, pos int,
-    s double, c long``) under the bit-identical nearest-centroid
-    assignment — the posexplode + corpus-wide avg shuffle replaced by
-    <= k x dim partial rows per batch."""
-    ids = np.asarray(cent_ids, dtype=np.int64)
-    C = np.asarray(cent_vecs, dtype=np.float64)
-    k, dim = C.shape
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _stack(pdf["v"])
-            pos_idx = np.argmin(full_d2(V, C), axis=1)
-            sums = np.zeros((k, dim), dtype=np.float64)
-            cnts = np.zeros(k, dtype=np.int64)
-            np.add.at(sums, pos_idx, V)
-            np.add.at(cnts, pos_idx, 1)
-            nz = np.nonzero(cnts)[0]
-            ci, pi = np.repeat(nz, dim), np.tile(np.arange(dim), len(nz))
-            yield pd.DataFrame(
-                {
-                    "cid": ids[ci],
-                    "pos": pi.astype(np.int32),
-                    "s": sums[ci, pi],
-                    "c": cnts[ci],
-                }
-            )
-
-    return fn
-
-
-def exact_topk_partials_fn(qids, qvecs, topk: int):
-    """mapInPandas closure for the brute-force exact legs: corpus
-    (vec_id, v) -> per-batch top-``topk`` candidates per query
-    (``qid long, neighbor_id long, d2 double``), self excluded.
-
-    Per-batch selection under the total order (d2, neighbor_id) is
-    exact for global top-k (the global top-k is a subset of the union
-    of per-batch top-ks), and d2 is bit-identical to the JVM fold —
-    so the final window over the ~|q| x topk x n_batches survivor rows
-    reproduces the banked rank list bit-for-bit.
-    """
-    qid_arr = np.asarray(qids, dtype=np.int64)
+def l2_scorer(qvecs):
+    """Scorer for the brute-force exact legs: a batch's (n, d) matrix
+    -> (n, q) squared L2 distances to the queries (full_d2, the
+    exact-leg fold replayed order-exactly)."""
     Q = np.asarray(qvecs, dtype=np.float64)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vid = pdf["vec_id"].to_numpy()
-            d2 = full_d2(_stack(pdf["v"]), Q)
-            out_q, out_n, out_d = [], [], []
-            for qi in range(len(qid_arr)):
-                col = d2[:, qi]
-                mask = vid != qid_arr[qi]
-                cand_v, cand_d = vid[mask], col[mask]
-                if len(cand_v) > topk:
-                    sel = np.lexsort((cand_v, cand_d))[:topk]
-                    cand_v, cand_d = cand_v[sel], cand_d[sel]
-                out_q.append(np.full(len(cand_v), qid_arr[qi]))
-                out_n.append(cand_v)
-                out_d.append(cand_d)
-            yield pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "d2": np.concatenate(out_d),
-                }
-            )
+    def score(V: np.ndarray) -> np.ndarray:
+        return full_d2(V, Q)
 
-    return fn
+    return score
 
 
-def adc_topk_partials_fn(flat, n_codes: int, n_sub: int, subdim: int, qids, qvecs, topk: int):
-    """mapInPandas closure fusing the full compressed-domain search
-    over a corpus batch: PQ-encode the batch (bit-identical codes),
-    build the per-query ADC tables from the SAME codebook
-    (bit-identical `_pq_adc_table` folds, built once per task), score
-    every (row, query) pair by the fixed s-order `_adc_sum` chain, and
-    emit per-batch top-``topk`` candidates per query under
-    (adc, neighbor_id) — ``qid long, neighbor_id long, adc double``,
-    self excluded.  Same exactness argument as exact_topk_partials_fn.
-    """
+def adc_scorer(flat, n_codes: int, n_sub: int, subdim: int):
+    """Scorer factory for the full-scan compressed-domain search:
+    ``adc_scorer(codebook...)(qvecs)`` builds the per-query ADC tables
+    from the codebook once (bit-identical `_pq_adc_table` folds via
+    subspace_d2); each batch is then PQ-encoded (bit-identical codes)
+    and scored by the fixed s-order `_adc_sum` chain."""
     C = np.asarray(flat, dtype=np.float64).copy()
-    qid_arr = np.asarray(qids, dtype=np.int64)
-    Q = np.asarray(qvecs, dtype=np.float64)
-    # per-query ADC lookup tables: T[qi, s, c] — the _pq_adc_table
-    # subspace folds, bit-identical via subspace_d2
-    T = subspace_d2(Q, C, n_codes, n_sub, subdim) if len(Q) else None
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0 or T is None:
-                continue
-            vid = pdf["vec_id"].to_numpy()
-            codes = pq_codes(_stack(pdf["v"]), C, n_codes, n_sub, subdim)
+    def for_queries(qvecs):
+        # per-query ADC lookup tables: T[qi, s, c]
+        Q = np.asarray(qvecs, dtype=np.float64)
+        T = subspace_d2(Q, C, n_codes, n_sub, subdim)
+
+        def score(V: np.ndarray) -> np.ndarray:
+            codes = pq_codes(V, C, n_codes, n_sub, subdim)
             # adc[i, qi] = ((0 + T[qi,0,cs0]) + T[qi,1,cs1]) + ... —
             # the _adc_sum fixed s-order chain, one add per step
-            acc = np.zeros((len(vid), len(qid_arr)), dtype=np.float64)
+            acc = np.zeros((len(V), T.shape[0]), dtype=np.float64)
             for s in range(n_sub):
                 acc += T[:, s, :][:, codes[:, s]].T
-            out_q, out_n, out_d = [], [], []
-            for qi in range(len(qid_arr)):
-                col = acc[:, qi]
-                mask = vid != qid_arr[qi]
-                cand_v, cand_d = vid[mask], col[mask]
-                if len(cand_v) > topk:
-                    sel = np.lexsort((cand_v, cand_d))[:topk]
-                    cand_v, cand_d = cand_v[sel], cand_d[sel]
-                out_q.append(np.full(len(cand_v), qid_arr[qi]))
-                out_n.append(cand_v)
-                out_d.append(cand_d)
-            yield pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc": np.concatenate(out_d),
-                }
-            )
+            return acc
 
-    return fn
+        return score
+
+    return for_queries
 
 
-def cosine_topk_partials_fn(qids, qvecs, topk: int):
-    """mapInPandas closure for the brute-force cosine legs: corpus
-    (vec_id, v) -> per-batch top-``topk`` candidates per query under
-    (sim DESC, neighbor_id), self excluded — ``qid long, neighbor_id
-    long, sim double``.  sim replays cosine_similarity_expr
-    order-exactly: dot and both norms are sequential-over-dims folds,
-    then sqrt / multiply / divide in the same operand order."""
-    qid_arr = np.asarray(qids, dtype=np.int64)
+def cosine_scorer(qvecs):
+    """Scorer for the brute-force cosine legs: (n, d) -> (n, q) sims
+    replaying cosine_similarity_expr order-exactly — dot and both
+    norms are sequential-over-dims folds, then sqrt / multiply /
+    divide in the same operand order."""
     Q = np.asarray(qvecs, dtype=np.float64)
     nq, dim = Q.shape
     q_norm_sq = np.zeros(nq, dtype=np.float64)
@@ -318,28 +235,50 @@ def cosine_topk_partials_fn(qids, qvecs, topk: int):
         q_norm_sq += Q[:, j] * Q[:, j]
     q_norm = np.sqrt(q_norm_sq)
 
+    def score(V: np.ndarray) -> np.ndarray:
+        n = V.shape[0]
+        dot = np.zeros((n, nq), dtype=np.float64)
+        v_norm_sq = np.zeros(n, dtype=np.float64)
+        for j in range(dim):
+            dot += Q[:, j][None, :] * V[:, j][:, None]
+            v_norm_sq += V[:, j] * V[:, j]
+        # cosine_similarity_expr: dot / (norm_a * norm_b) with
+        # norm_a the QUERY-side norm — same operand order here
+        return dot / (q_norm[None, :] * np.sqrt(v_norm_sq)[:, None])
+
+    return score
+
+
+def topk_partials_fn(score, qids, topk: int, descending: bool = False):
+    """mapInPandas closure for every brute-force search leg: corpus
+    (vec_id, v) -> per-batch top-``topk`` candidates per query
+    (``qid long, neighbor_id long, score double``), self excluded.
+    ``score`` maps a batch's (n, d) matrix to (n, q) scores (one of
+    the scorers above).
+
+    Per-batch selection under the total order (score, neighbor_id) —
+    score descending when ``descending`` — is exact for global top-k
+    (the global top-k is a subset of the union of per-batch top-ks),
+    and every scorer is bit-identical to its JVM fold, so the final
+    window over the ~|q| x topk x n_batches survivor rows reproduces
+    the banked rank list bit-for-bit.
+    """
+    qid_arr = np.asarray(qids, dtype=np.int64)
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             vid = pdf["vec_id"].to_numpy()
-            V = _stack(pdf["v"])
-            n = V.shape[0]
-            dot = np.zeros((n, nq), dtype=np.float64)
-            v_norm_sq = np.zeros(n, dtype=np.float64)
-            for j in range(dim):
-                dot += Q[:, j][None, :] * V[:, j][:, None]
-                v_norm_sq += V[:, j] * V[:, j]
-            # cosine_similarity_expr: dot / (norm_a * norm_b) with
-            # norm_a the QUERY-side norm — same operand order here
-            sim = dot / (q_norm[None, :] * np.sqrt(v_norm_sq)[:, None])
+            S = score(_stack(pdf["v"]))
             out_q, out_n, out_s = [], [], []
-            for qi in range(nq):
-                col = sim[:, qi]
+            for qi in range(len(qid_arr)):
+                col = S[:, qi]
                 mask = vid != qid_arr[qi]
                 cand_v, cand_s = vid[mask], col[mask]
                 if len(cand_v) > topk:
-                    sel = np.lexsort((cand_v, -cand_s))[:topk]
+                    key = -cand_s if descending else cand_s
+                    sel = np.lexsort((cand_v, key))[:topk]
                     cand_v, cand_s = cand_v[sel], cand_s[sel]
                 out_q.append(np.full(len(cand_v), qid_arr[qi]))
                 out_n.append(cand_v)
@@ -348,7 +287,7 @@ def cosine_topk_partials_fn(qids, qvecs, topk: int):
                 {
                     "qid": np.concatenate(out_q),
                     "neighbor_id": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
+                    "score": np.concatenate(out_s),
                 }
             )
 

@@ -31,7 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..functions import batchmath as bm
 from ..functions.vector import cosine_similarity_expr, lit_double_array
+from ..session import ensure_package_on_executors
 from ..sources.tables import _artifact, fan_out, load_table
 
 EMBED_DIM = 64
@@ -89,35 +91,17 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for the first 50 query vectors.
 
-    r18 (guide §4.2): one mapInPandas corpus pass — numpy replays the
-    cosine_similarity_expr folds order-exactly (sequential over dims;
-    bit-identical sims) and emits per-batch top-TOPK candidates per
-    query under (sim DESC, neighbor_id), which is exact for the global
-    top-k; the final window ranks the bounded survivors.  The former
-    plan evaluated three interpreted 64-term folds per
-    |corpus| x |q| pair under a broadcast NLJ before an equally wide
-    window.  Ties broken by neighbor id for determinism.
+    One batched top-k scan (:func:`_topk_scan`): numpy replays the
+    cosine_similarity_expr folds order-exactly (batchmath.cosine_scorer:
+    sequential over dims, bit-identical sims) and keeps per-batch
+    top-TOPK candidates per query under (sim DESC, neighbor_id); the
+    final window ranks the bounded survivors.  Ties broken by neighbor
+    id for determinism.
     """
-    from ..functions import batchmath as bm
-    from ..session import ensure_package_on_executors
-
     emb = _embeddings(spark, sf_dir)
-    cq = _collect_queries(emb, sf_dir)
-    if cq is None:
-        return spark.createDataFrame(
-            [], schema="qid long, neighbor_id long, cosine double, rn long"
-        )
-    qids, qvecs = cq
-    ensure_package_on_executors(spark)
-    part = emb.select("vec_id", "v").mapInPandas(
-        bm.cosine_topk_partials_fn(qids, qvecs, TOPK),
-        schema="qid long, neighbor_id long, sim double",
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        part.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= TOPK)
-        .select("qid", "neighbor_id", F.round("sim", 6).alias("cosine"), "rn")
+    top = _topk_scan(emb, bm.cosine_scorer, TOPK, sf_dir, descending=True)
+    return top.select(
+        "qid", "neighbor_id", F.round("score", 6).alias("cosine"), "rn"
     )
 
 
@@ -227,8 +211,6 @@ def _bucket_ids_matmul(n_tables: int, bpt: int):
     """
     from pyspark.sql.functions import pandas_udf
 
-    from ..functions import batchmath as bm
-
     planes = np.asarray(_hyperplanes(n_tables * bpt), dtype=np.float64)
     weights = 1 << np.arange(bpt, dtype=np.int64)
 
@@ -261,8 +243,6 @@ def _probe_keys(
     """
     # the matmul bucket builder runs Python on executors — make the
     # package importable there under a vanilla foreign-cwd session
-    from ..session import ensure_package_on_executors
-
     ensure_package_on_executors(emb.sparkSession)
     masks = [0]
     if radius >= 1:
@@ -772,12 +752,16 @@ def ivf_assignments(spark: SparkSession, sf_dir: str):
     hit skips the training passes and their K x EMBED_DIM collects.
 
     Flat regime (k below IVF_TWO_LEVEL_MIN_K — every test SF) since
-    r18 (guide §4.2): each Lloyd pass is ONE mapInPandas corpus scan —
-    per Arrow batch, numpy computes the bit-identical `_sq_dist`
-    argmin (batchmath.full_d2, sequential over dims; first-min ==
-    min_by's (d2, cid) tie-break over the ascending-cid centroid
-    array) and scatter-adds per-(cid, pos) partial sums + counts;
-    Spark sum-merges the bounded partials and the driver re-centers.
+    r18: each Lloyd pass is ONE mapInPandas corpus scan
+    of the PQ training kernel with one subspace
+    (batchmath.pq_train_partials_fn at n_sub=1, subdim=EMBED_DIM, the
+    centroid matrix as the codebook) — per Arrow batch, numpy computes
+    the bit-identical `_sq_dist` argmin (subspace_d2 at one subspace
+    is full_d2 operation for operation, sequential over dims;
+    first-min == min_by's (d2, cid) tie-break over the ascending-cid
+    centroid array) and scatter-adds per-(code, pos) partial sums +
+    counts; Spark sum-merges the bounded partials and the driver maps
+    each code (a centroid position) back to its cid and re-centers.
     The former JVM pass crossJoined the corpus with the broadcast
     centroid table (n x k interpreted 64-term folds) and posexploded
     the corpus 64-wide into the mean hash-agg — measured 4.8 -> 1.3 s
@@ -810,11 +794,6 @@ def ivf_assignments(spark: SparkSession, sf_dir: str):
 def _ivf_lloyd_flat_batched(spark: SparkSession, emb: DataFrame):
     """Flat-regime Lloyd via batched numpy kernels (see
     ivf_assignments docstring for the shape and exactness notes)."""
-    import numpy as np
-
-    from ..functions import batchmath as bm
-    from ..session import ensure_package_on_executors
-
     assign_schema = "vec_id long, v array<double>, cid long"
     cents_schema = "cid long, cv array<double>"
     seeds = (
@@ -835,10 +814,10 @@ def _ivf_lloyd_flat_batched(spark: SparkSession, emb: DataFrame):
     for _ in range(LLOYD_ITERATIONS):
         cells = (
             vproj.mapInPandas(
-                bm.centroid_partials_fn(ids, C),
-                schema="cid long, pos int, s double, c long",
+                bm.pq_train_partials_fn(C.ravel(), len(ids), 1, EMBED_DIM),
+                schema="code int, pos int, s double, c long",
             )
-            .groupBy("cid", "pos")
+            .groupBy("code", "pos")
             .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
             .toPandas()
         )
@@ -846,7 +825,7 @@ def _ivf_lloyd_flat_batched(spark: SparkSession, emb: DataFrame):
         # exactly the avg's final op); empty clusters emit no rows and
         # disappear, matching the old groupBy-over-assigned update
         means = cells["s"].to_numpy() / cells["c"].to_numpy()
-        cid_arr = cells["cid"].to_numpy()
+        cid_arr = ids[cells["code"].to_numpy()]
         ids = np.unique(cid_arr)
         C = np.zeros((len(ids), EMBED_DIM), dtype=np.float64)
         C[np.searchsorted(ids, cid_arr), cells["pos"].to_numpy()] = means
@@ -2011,9 +1990,6 @@ def _batched_codes(
     on this path (2 MiB at production IVF-PQ geometry)."""
     from pyspark.sql import types as T
 
-    from ..functions import batchmath as bm
-    from ..session import ensure_package_on_executors
-
     ensure_package_on_executors(src.sparkSession)
     out_schema = T.StructType(
         [src.schema[name] for name in passthrough]
@@ -2080,76 +2056,37 @@ def _collect_queries(emb: DataFrame, sf_dir: str | None = None):
     return _artifact(emb.sparkSession, sf_dir, "embeddings", "queries", (), build)
 
 
-def _exact_topk_frame(
-    emb: DataFrame, topk: int = TOPK, sf_dir: str | None = None
-) -> DataFrame:
-    """The brute-force exact squared-L2 leg every *_recall_report
-    audits against, batched (r18, guide §4.2): one mapInPandas corpus
-    pass emits per-batch top-``topk`` candidates per query (d2 via the
-    bit-identical exact-leg fold replay, per-batch selection under the
-    (d2, neighbor_id) total order is exact for global top-k), then the
-    final window ranks the ~|q| x topk x n_batches survivors —
-    (qid, neighbor_id, d2, rn), self excluded.  The JVM form built the
-    full |corpus| x |q| pair table (broadcast NLJ) and evaluated the
-    64-term fold per pair before an equally wide window."""
-    from ..functions import batchmath as bm
-    from ..session import ensure_package_on_executors
-
-    spark = emb.sparkSession
-    cq = _collect_queries(emb, sf_dir)
-    if cq is None:
-        return spark.createDataFrame(
-            [], schema="qid long, neighbor_id long, d2 double, rn long"
-        )
-    qids, qvecs = cq
-    ensure_package_on_executors(spark)
-    part = emb.select("vec_id", "v").mapInPandas(
-        bm.exact_topk_partials_fn(qids, qvecs, topk),
-        schema="qid long, neighbor_id long, d2 double",
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("neighbor_id"))
-    return (
-        part.withColumn("rn", F.row_number().over(wq).cast("long"))
-        .filter(F.col("rn") <= topk)
-    )
-
-
-def _adc_topk_frame(
+def _topk_scan(
     emb: DataFrame,
-    flat_vals: list,
-    n_codes: int,
+    make_score,
     topk: int,
-    sf_dir: str | None = None,
+    sf_dir: str,
+    descending: bool = False,
 ) -> DataFrame:
-    """Full-scan compressed-domain search, fused into one Arrow batch
-    kernel (r18, guide §4.2): encode the batch, build the per-query
-    ADC tables once per task from the same codebook, score by the
-    fixed s-order `_adc_sum` chain, emit per-batch top-``topk``
-    candidates per query — (qid, neighbor_id, adc, rn) after the
-    final window over the bounded survivors.  Codes, table entries
-    and adc totals are bit-identical to the JVM path (see
-    tests/test_batchmath.py); per-batch selection under
-    (adc, neighbor_id) is exact for global top-k.  Replaces the
-    corpus-encode projection + broadcast query-table join + full-width
-    window of the former plan."""
-    from ..functions import batchmath as bm
-    from ..session import ensure_package_on_executors
-
+    """The one brute-force top-k search over the corpus, batched — the
+    reference's map / shuffle by key / reduce: one mapInPandas corpus
+    pass scores every row against the query set (``make_score(qvecs)``,
+    one of the batchmath scorers, bit-identical to its JVM fold) and
+    keeps each batch's top-``topk`` per query under (score,
+    neighbor_id), score descending when ``descending``; one window
+    then ranks the ~|q| x topk x n_batches survivors — (qid,
+    neighbor_id, score, rn), self excluded.  Per-batch selection under
+    that total order is exact for the global top-k, and no
+    |corpus| x |q| pair table exists."""
     spark = emb.sparkSession
     cq = _collect_queries(emb, sf_dir)
     if cq is None:
         return spark.createDataFrame(
-            [], schema="qid long, neighbor_id long, adc double, rn long"
+            [], schema="qid long, neighbor_id long, score double, rn long"
         )
     qids, qvecs = cq
     ensure_package_on_executors(spark)
     part = emb.select("vec_id", "v").mapInPandas(
-        bm.adc_topk_partials_fn(
-            flat_vals, n_codes, PQ_SUB, PQ_SUBDIM, qids, qvecs, topk
-        ),
-        schema="qid long, neighbor_id long, adc double",
+        bm.topk_partials_fn(make_score(qvecs), qids, topk, descending),
+        schema="qid long, neighbor_id long, score double",
     )
-    w = Window.partitionBy("qid").orderBy(F.col("adc"), F.col("neighbor_id"))
+    score = F.col("score").desc() if descending else F.col("score")
+    w = Window.partitionBy("qid").orderBy(score, F.col("neighbor_id"))
     return (
         part.withColumn("rn", F.row_number().over(w).cast("long"))
         .filter(F.col("rn") <= topk)
@@ -2239,16 +2176,18 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn), self excluded, ties to the lower neighbor id (the cosine_topk
     conventions).
 
-    Scale shape — why ADC is THE 100 TB vector-search pattern: the
-    corpus pass reads only the code columns (PQ_SUB small ints per
-    vector, ~16x narrower than the raw embedding), scoring is O(PQ_SUB)
-    lookups + adds per (query, vector) with NO per-pair vector
-    arithmetic, the 50-row query-table frame rides a BroadcastExchange
-    (bounded: |queries| x PQ_SUB x n_codes doubles), and the only
-    shuffle is the per-qid top-k, pruned map-side by WindowGroupLimit
-    to K rows per (partition, qid).  At production scale the same plan
-    runs after an IVF list prefilter (ann_ivf's cluster assignment)
-    so each query touches ~nprobe/k of the codes.
+    Scale shape — why ADC is THE 100 TB vector-search pattern: scoring
+    is O(PQ_SUB) lookups + adds per (query, vector) with NO per-pair
+    vector arithmetic.  The plan is one batched top-k scan
+    (:func:`_topk_scan` with batchmath.adc_scorer): the per-query ADC
+    tables (bounded: |queries| x PQ_SUB x n_codes doubles) are built
+    once on the driver and ride the kernel closure; each Arrow batch
+    of the corpus is PQ-encoded, scored and cut to its per-query
+    top-K inside ONE MapInPandas pass, so no pair table exists; the
+    only shuffle is the per-qid window over those bounded survivors.
+    At production scale the same scoring runs after an IVF list
+    prefilter (ann_ivf_adc) so each query touches ~nprobe/k of the
+    codes.
 
     Exactness: adc_d2 equals sum_s ||q_s - codebook[code_s]||^2 by
     construction, so the DuckDB twin recomputes each term with the
@@ -2265,16 +2204,9 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], schema="qid long, neighbor_id long, adc_d2 double, rn long"
         )
     codes, flat_vals = cb
-    n_codes = len(codes)
-
-    # r18: the whole full-scan ADC search — corpus encode, per-query
-    # lookup tables, fixed s-order scoring, per-batch top-k — fused
-    # into one Arrow batch kernel (guide §4.2; bit-identical values,
-    # see _adc_topk_frame).  The former plan built the corpus-encode
-    # projection, broadcast the 50-row table frame, and windowed the
-    # full |corpus| x |q| pair table.
-    return _adc_topk_frame(emb, flat_vals, n_codes, TOPK, sf_dir).select(
-        "qid", "neighbor_id", F.round("adc", 6).alias("adc_d2"), "rn"
+    adc = bm.adc_scorer(flat_vals, len(codes), PQ_SUB, PQ_SUBDIM)
+    return _topk_scan(emb, adc, TOPK, sf_dir).select(
+        "qid", "neighbor_id", F.round("score", 6).alias("adc_d2"), "rn"
     )
 
 
@@ -2751,8 +2683,8 @@ def ivf_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     *_recall_report convention).
     """
     emb = _embeddings(spark, sf_dir)
-    # exact ground-truth leg, batched (r18 — see _exact_topk_frame)
-    exact = _exact_topk_frame(emb, sf_dir=sf_dir).select("qid", "neighbor_id")
+    # exact ground-truth leg: the batched top-k scan under squared L2
+    exact = _topk_scan(emb, bm.l2_scorer, TOPK, sf_dir).select("qid", "neighbor_id")
     per_q = exact.groupBy("qid").agg(
         F.count("*").cast("long").alias("n_exact")
     )
@@ -2957,12 +2889,11 @@ def adc_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the codes (Jégou et al. §V's re-ranking variant).
 
     Scale shape: stage 1 is pq_adc_topk's pinned plan with the CAP in
-    place of TOPK (narrow code-column corpus pass, broadcast bounded
-    query tables, map-side WindowGroupLimit); stage 2 joins the
-    CAP-bounded candidate list back to the corpus BY KEY (vec_id — a
-    broadcast hash join on the bounded side, never a second corpus
-    pair-scan) and windows |q| x CAP rows.  Everything past the one
-    code-column corpus scan is candidate-set-sized.
+    place of TOPK (one batched top-k scan of the corpus, no pair
+    table); stage 2 joins the CAP-bounded candidate list back to the
+    corpus BY KEY (vec_id — a broadcast hash join on the bounded side,
+    never a second corpus pair-scan) and windows |q| x CAP rows.
+    Everything past the one corpus scan is candidate-set-sized.
 
     Exactness: stage-1 ranks replay the banked ADC folds; stage-2 d2
     is the banked full-vector left fold; both tie on neighbor_id.
@@ -2974,14 +2905,11 @@ def adc_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], schema="qid long, neighbor_id long, d2 double, rn long"
         )
     codes, flat_vals = cb
-    n_codes = len(codes)
 
-    # stage 1: fused full-scan ADC kernel at cap=RERANK_CAP (r18,
-    # _adc_topk_frame — pq_adc_topk's plan with the CAP in place of
-    # TOPK).
-    cand = _adc_topk_frame(emb, flat_vals, n_codes, RERANK_CAP, sf_dir).select(
-        "qid", "neighbor_id"
-    )
+    # stage 1: the batched ADC top-k scan at cap=RERANK_CAP —
+    # pq_adc_topk's plan with the CAP in place of TOPK.
+    adc = bm.adc_scorer(flat_vals, len(codes), PQ_SUB, PQ_SUBDIM)
+    cand = _topk_scan(emb, adc, RERANK_CAP, sf_dir).select("qid", "neighbor_id")
 
     # stage 2: exact re-rank of the CAP-bounded candidates (shared
     # helper — raw vectors fetched BY KEY, candidate-set-sized work).
@@ -3058,8 +2986,8 @@ def ivf_pq_rerank_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], schema=schema)
     ranked = ranked.localCheckpoint(eager=True)
 
-    # exact ground-truth leg, batched (r18 — see _exact_topk_frame)
-    exact = _exact_topk_frame(emb, sf_dir=sf_dir).select("qid", "neighbor_id")
+    # exact ground-truth leg: the batched top-k scan under squared L2
+    exact = _topk_scan(emb, bm.l2_scorer, TOPK, sf_dir).select("qid", "neighbor_id")
     per_q = exact.groupBy("qid").agg(
         F.count("*").cast("long").alias("n_exact")
     )
@@ -3170,8 +3098,8 @@ def rerank_cap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("cap").cast("long").alias("cap"), "qid", "neighbor_id")
     )
 
-    # exact ground-truth leg, batched (r18 — see _exact_topk_frame)
-    exact = _exact_topk_frame(emb, sf_dir=sf_dir).select("qid", "neighbor_id")
+    # exact ground-truth leg: the batched top-k scan under squared L2
+    exact = _topk_scan(emb, bm.l2_scorer, TOPK, sf_dir).select("qid", "neighbor_id")
     per_q = exact.groupBy("qid").agg(
         F.count("*").cast("long").alias("n_exact")
     )
@@ -3252,9 +3180,6 @@ def _pq_train_flat(
         cb = _pq_collect_codebook(emb, k)
         if cb is None:
             return None
-        from ..functions import batchmath as bm
-        from ..session import ensure_package_on_executors
-
         ensure_package_on_executors(emb.sparkSession)
         codes, seed_flat = cb
         n_codes = len(codes)
@@ -3359,9 +3284,6 @@ def pq_train_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploded the corpus 8-wide into the hash agg.  The per-cell d2
     # sum re-associates under the round-6 output contract (the DuckDB
     # twin already sums in its own order).
-    from ..functions import batchmath as bm
-    from ..session import ensure_package_on_executors
-
     ensure_package_on_executors(spark)
     part = emb.select("v").mapInPandas(
         bm.pq_train_report_partials_fn(
@@ -3400,13 +3322,12 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval on corpora with < TOPK non-self vectors), so the report
     grid covers the qids with at least one exact neighbor.
 
-    Scale shape: each variant is exactly pq_adc_topk's plan (narrow
-    code-column corpus pass, broadcast bounded query ADC tables,
-    WindowGroupLimit top-k) and the exact leg is one brute-force d2
-    top-k over the same N_QUERIES broadcast — query-set-sized
-    everywhere past the corpus scans.  Recall here audits BOTH
-    quantization losses at once: code granularity (shared) and
-    codebook fit (the trained-vs-seed delta).
+    Scale shape: each variant is exactly pq_adc_topk's plan (one
+    batched top-k scan with the bounded query ADC tables in the
+    kernel closure) and the exact leg is the same scan under squared
+    L2 — query-set-sized everywhere past the corpus scans.  Recall
+    here audits BOTH quantization losses at once: code granularity
+    (shared) and codebook fit (the trained-vs-seed delta).
     """
     emb = _embeddings(spark, sf_dir)
     t = _pq_train_flat(emb, sf_dir)
@@ -3418,14 +3339,15 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     _codes, seed_flat, trained_flat = t
     n_codes = len(_codes)
 
-    # exact leg: brute-force squared-L2 top-k (the metric ADC
-    # approximates), batched — r18, see _exact_topk_frame
-    exact = _exact_topk_frame(emb, sf_dir=sf_dir).select("qid", "neighbor_id")
+    # exact leg: the batched top-k scan under squared L2 (the metric
+    # ADC approximates)
+    exact = _topk_scan(emb, bm.l2_scorer, TOPK, sf_dir).select("qid", "neighbor_id")
 
     def adc_top(flat_vals, variant):
-        # each variant is the fused full-scan ADC kernel over its own
-        # codebook (r18, _adc_topk_frame — pq_adc_topk's plan)
-        return _adc_topk_frame(emb, flat_vals, n_codes, TOPK, sf_dir).select(
+        # each variant is the batched ADC top-k scan over its own
+        # codebook — pq_adc_topk's plan
+        adc = bm.adc_scorer(flat_vals, n_codes, PQ_SUB, PQ_SUBDIM)
+        return _topk_scan(emb, adc, TOPK, sf_dir).select(
             F.lit(variant).alias("variant"), "qid", "neighbor_id"
         )
 
@@ -3487,15 +3409,13 @@ def pq_bits_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_codes, query-set-bounded) and the stored code width (4 vs 8
     bits per subspace — 2x index bytes) grow.
 
-    Scale shape: each variant is exactly pq_adc_topk's plan (narrow
-    code-column corpus pass, broadcast bounded query ADC tables,
-    map-side WindowGroupLimit top-k); the 8-bit codebook trains with
-    the same PQ_TRAIN_ITERS one-scan Lloyd passes (train-once memo,
-    k in its params) and its 256 x EMBED_DIM
-    flat codebook rides the geometry-driven _pq_codebook_source
-    transport (128 KiB — still the literal path; past 1 MiB it
-    switches to the broadcast frame).  The exact leg is one
-    brute-force d2 top-k over the broadcast query set.
+    Scale shape: each variant is exactly pq_adc_topk's plan (one
+    batched top-k scan with the bounded query ADC tables in the
+    kernel closure); the 8-bit codebook trains with the same
+    PQ_TRAIN_ITERS one-scan Lloyd passes (train-once memo, k in its
+    params) and its 256 x EMBED_DIM flat codebook (128 KiB) rides the
+    kernel closure like the 4-bit one.  The exact leg is the same
+    scan under squared L2.
 
     Exactness: both variants' codes and ADC totals replay the banked
     fixed-order folds (the 8-bit leg is the same machinery at k=256);
@@ -3511,8 +3431,8 @@ def pq_bits_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     if t4 is None or t8 is None:
         return spark.createDataFrame([], schema=schema)
 
-    # exact ground-truth leg, batched (r18 — see _exact_topk_frame)
-    exact = _exact_topk_frame(emb, sf_dir=sf_dir).select("qid", "neighbor_id")
+    # exact ground-truth leg: the batched top-k scan under squared L2
+    exact = _topk_scan(emb, bm.l2_scorer, TOPK, sf_dir).select("qid", "neighbor_id")
     per_q = exact.groupBy("qid").agg(
         F.count("*").cast("long").alias("n_exact")
     )
@@ -3522,8 +3442,8 @@ def pq_bits_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # k=256 leg's corpus encode was 16x the 4-bit compute as an
         # interpreted fold: ~280 s at sf0.1, now one numpy pass)
         codes, _seed, trained_flat = t
-        n_codes = len(codes)
-        return _adc_topk_frame(emb, trained_flat, n_codes, TOPK, sf_dir).select(
+        adc = bm.adc_scorer(trained_flat, len(codes), PQ_SUB, PQ_SUBDIM)
+        return _topk_scan(emb, adc, TOPK, sf_dir).select(
             F.lit(bits).cast("long").alias("bits"), "qid", "neighbor_id"
         )
 

@@ -53,8 +53,8 @@ t("mip_identity_4p", lambda: noop(
 # the cosine partial-topk kernel alone
 t("mip_cosine_kernel", lambda: noop(
     emb.select("vec_id", "v").mapInPandas(
-        bm.cosine_topk_partials_fn(qids, qvecs, sim.TOPK),
-        schema="qid long, neighbor_id long, sim double")))
+        bm.topk_partials_fn(bm.cosine_scorer(qvecs), qids, sim.TOPK, descending=True),
+        schema="qid long, neighbor_id long, score double")))
 
 # collect_queries driver job alone
 t("collect_queries", lambda: sim._collect_queries(emb))

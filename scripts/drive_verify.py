@@ -1,12 +1,14 @@
-"""Driver simulation — exercises /root/repo/__spark_entry__.py exactly as
-the grading driver does: entry() smoke at sf0.001, then each queries()[name]
-vs oracle_sql()[name] at sf0.01 with order-insensitive value hashing."""
+"""Driver simulation — exercises this checkout's __spark_entry__.py exactly
+as the grading driver does: entry() smoke at sf0.001, then each
+queries()[name] vs oracle_sql()[name] at sf0.01 with order-insensitive
+value hashing.  The repo root is taken from this file's location, so a run
+from any copy of the repo verifies that copy's code."""
 import hashlib
 import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd

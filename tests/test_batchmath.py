@@ -5,6 +5,8 @@ tolerance — because the operators that now route through mapInPandas
 oracle hashes computed from the fold results.
 """
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -81,6 +83,10 @@ def test_full_d2_bit_identical(corpus):
     for qi in range(5):
         for vi in range(V.shape[0]):
             assert jvm[(qi, vi)] == N[vi, qi]
+    # the flat IVF Lloyd pass runs the PQ kernel with one subspace: its
+    # distances must be full_d2's, bit for bit
+    sub = bm.subspace_d2(V, V[:5].ravel(), 5, 1, sim.EMBED_DIM)[:, 0, :]
+    assert np.array_equal(sub, N)
 
 
 def test_dot_fold_bit_identical(corpus):
@@ -102,58 +108,102 @@ def test_dot_fold_bit_identical(corpus):
             assert jvm[(qi, vi)] == acc[vi, qi]
 
 
-def test_train_partials_reproduce_per_cell_membership(corpus, spark):
+@pytest.mark.parametrize(
+    "n_sub,subdim",
+    [(sim.PQ_SUB, sim.PQ_SUBDIM), (1, sim.EMBED_DIM)],
+    ids=["pq", "ivf"],
+)
+def test_train_partials_reproduce_per_cell_membership(corpus, spark, n_sub, subdim):
     """The partial-sum pass must assign exactly the same rows to each
     (code, pos) cell as the JVM posexplode + group-by it replaced:
     counts integer-equal, sums equal up to reassociation (checked at
     1 ulp-scale tolerance), and the assignment itself bit-identical
-    (covered by test_pq_codes_bit_identical)."""
+    (covered by test_pq_codes_bit_identical).  The ivf geometry (one
+    subspace spanning every dimension) is the flat IVF Lloyd pass."""
     df, V = corpus
     flat = [float(x) for x in V[: sim.PQ_K].ravel()]
     part = (
         df.select("v")
         .mapInPandas(
-            bm.pq_train_partials_fn(flat, sim.PQ_K, sim.PQ_SUB, sim.PQ_SUBDIM),
+            bm.pq_train_partials_fn(flat, sim.PQ_K, n_sub, subdim),
             schema="code int, pos int, s double, c long",
         )
         .groupBy("code", "pos")
         .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
         .collect()
     )
-    codes = bm.pq_codes(V, flat, sim.PQ_K, sim.PQ_SUB, sim.PQ_SUBDIM)
+    codes = bm.pq_codes(V, flat, sim.PQ_K, n_sub, subdim)
     got = {(r["code"], r["pos"]): (r["s"], r["c"]) for r in part}
     for (code, pos), (s, c) in got.items():
-        members = V[codes[:, pos // sim.PQ_SUBDIM] == code, pos]
+        members = V[codes[:, pos // subdim] == code, pos]
         assert c == len(members)
         assert s == pytest.approx(members.sum(), rel=1e-12)
     # every non-empty cell present
     n_cells = sum(
-        sim.PQ_SUBDIM
-        for sp in range(sim.PQ_SUB)
-        for code in np.unique(codes[:, sp])
+        subdim for sp in range(n_sub) for code in np.unique(codes[:, sp])
     )
     assert len(got) == n_cells
 
 
-def test_exact_topk_partials_superset_of_global_topk(corpus, spark):
-    """Per-batch top-k candidates must contain the global (d2,
-    neighbor_id) top-k for every query, with bit-identical d2."""
+def _adc_reference(V, Q, flat):
+    """(n, q) ADC totals from the PQ codes and the per-query subspace
+    tables, summed in the fixed s-order one scalar add at a time."""
+    T = bm.subspace_d2(Q, flat, sim.PQ_K, sim.PQ_SUB, sim.PQ_SUBDIM)
+    codes = bm.pq_codes(V, flat, sim.PQ_K, sim.PQ_SUB, sim.PQ_SUBDIM)
+    R = np.zeros((len(V), len(Q)))
+    for vi in range(len(V)):
+        for qi in range(len(Q)):
+            acc = 0.0
+            for s in range(sim.PQ_SUB):
+                acc += T[qi, s, codes[vi, s]]
+            R[vi, qi] = acc
+    return R
+
+
+def _cosine_reference(V, Q):
+    """(n, q) cosine similarities as scalar left folds over the
+    dimensions, then dot / (query norm * row norm)."""
+    R = np.zeros((len(V), len(Q)))
+    for vi in range(len(V)):
+        for qi in range(len(Q)):
+            dot = qq = vv = 0.0
+            for j in range(V.shape[1]):
+                dot += Q[qi, j] * V[vi, j]
+                qq += Q[qi, j] * Q[qi, j]
+                vv += V[vi, j] * V[vi, j]
+            R[vi, qi] = dot / (math.sqrt(qq) * math.sqrt(vv))
+    return R
+
+
+@pytest.mark.parametrize("leg", ["l2", "adc", "cosine"])
+def test_topk_partials_superset_of_global_topk(corpus, spark, leg):
+    """Per-batch top-k candidates must contain the global (score,
+    neighbor_id) top-k for every query — ascending for l2 and ADC,
+    descending for cosine — with bit-identical scores."""
     df, V = corpus
-    qids = list(range(4))
-    fn = bm.exact_topk_partials_fn(qids, V[:4], topk=3)
+    qids, Q = list(range(4)), V[:4]
+    flat = [float(x) for x in V[: sim.PQ_K].ravel()]
+    if leg == "l2":
+        score, ref, descending = bm.l2_scorer(Q), bm.full_d2(V, Q), False
+    elif leg == "adc":
+        adc = bm.adc_scorer(flat, sim.PQ_K, sim.PQ_SUB, sim.PQ_SUBDIM)
+        score, ref, descending = adc(Q), _adc_reference(V, Q, flat), False
+    else:
+        score, ref, descending = bm.cosine_scorer(Q), _cosine_reference(V, Q), True
+    fn = bm.topk_partials_fn(score, qids, topk=3, descending=descending)
     out = (
         df.repartition(5)
-        .mapInPandas(fn, schema="qid long, neighbor_id long, d2 double")
+        .mapInPandas(fn, schema="qid long, neighbor_id long, score double")
         .collect()
     )
-    cand = {(r["qid"], r["neighbor_id"]): r["d2"] for r in out}
-    D = bm.full_d2(V, V[:4])
+    cand = {(r["qid"], r["neighbor_id"]): r["score"] for r in out}
+    sign = -1.0 if descending else 1.0
     for qi in qids:
         order = sorted(
-            (D[vi, qi], vi) for vi in range(V.shape[0]) if vi != qi
+            (sign * ref[vi, qi], vi) for vi in range(V.shape[0]) if vi != qi
         )[:3]
-        for d2, vi in order:
-            assert cand[(qi, vi)] == d2
+        for _, vi in order:
+            assert cand[(qi, vi)] == ref[vi, qi]
 
 
 def test_pq_codes_cache_keys_on_codebook_content(spark, sf_dir, corpus):
@@ -204,7 +254,8 @@ def test_cosine_topk_zero_norm_row():
     )
 
     def top(k):
-        fn = bm.cosine_topk_partials_fn([0], [[1.0, 0.0, 0.0]], k)
+        score = bm.cosine_scorer([[1.0, 0.0, 0.0]])
+        fn = bm.topk_partials_fn(score, [0], k, descending=True)
         with np.errstate(invalid="ignore"):
             (out,) = fn(iter([pdf]))
         return out
@@ -213,4 +264,4 @@ def test_cosine_topk_zero_norm_row():
     assert top(3)["neighbor_id"].tolist() == [2, 4, 3]
     everything = top(4)
     assert everything["neighbor_id"].tolist() == [1, 2, 3, 4]
-    assert np.isnan(everything["sim"].iloc[0])
+    assert np.isnan(everything["score"].iloc[0])

@@ -443,9 +443,10 @@ def test_pq_adc_topk_plan_shape(spark, sf_dir):
 def test_ann_ivf_adc_plan_shape(spark, sf_dir):
     """Scale pins for the IVF-prefiltered ADC search (r13): the
     scoring join must be a broadcast HASH join on cid (the bounded
-    probe side builds, the corpus streams) — NOT the corpus-wide
-    BroadcastNestedLoopJoin pq_adc_topk uses, which is exactly what
-    the cell prefilter exists to avoid.  BNLJ may appear ONLY in the
+    probe side builds, the corpus streams) — NOT a corpus-wide
+    query pairing: pq_adc_topk scores every corpus row against every
+    query in one batched scan, which is exactly what the cell
+    prefilter exists to avoid.  BNLJ may appear ONLY in the
     bounded index-build/probe steps (corpus x centroids, 50-query x
     centroids), where the broadcast side is the k-row centroid table.
     The per-qid top-k must prune map-side via WindowGroupLimit."""
