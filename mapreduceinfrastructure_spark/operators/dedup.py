@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_expr
-from ..sources.tables import fan_out, load_table
+from ..sources.tables import _artifact, fan_out, load_table
 
 # Shingles appearing in more than this many docs are dropped from the
 # jaccard candidate join (stopword-shingle cap; keeps the self-join from
@@ -41,8 +41,9 @@ from ..sources.tables import fan_out, load_table
 HOT_SHINGLE_DF_CAP = 1000
 
 # minhash_lsh_neardup reuses the shingle projection for signatures AND
-# the exact verify (4 consumers total).  The size-aware switch persists
-# the shared projection when the input exceeds this threshold.  Order-
+# the exact verify (4 consumers total).  The size-aware switch stores
+# the shared projection (one lazy checkpoint per documents file, see
+# _stored) when the input exceeds this threshold.  Order-
 # controlled A/B at sf0.1 (each variant measured first in a fresh
 # session): re-scan 2.3-3.4 s vs persisted 3.9-4.9 s — at local sizes
 # the persist LOSES, because it forces the distinct shuffle onto the
@@ -73,41 +74,19 @@ SHINGLE_PERSIST_MIN_BYTES = 256 * 1024 * 1024
 # and full recall at jaccard ≥ 0.9 on the test corpus.
 #
 # VERDICT r17 #3 — this switch is ALSO the mega-doc guard for the
-# r17 one-pass per-doc shingle LISTS (_exact_pairs /
-# _incremental_near_exact / lexical's by_doc): a pathological giant
+# per-doc shingle LISTS of _doc_shingles: a pathological giant
 # document makes its collect_list row as long as the doc, and the df
-# cap bounds candidate PAIRS, not list length.  The dedup-side
-# corpus-wide list frames exist ONLY on this exact branch, i.e. only
-# while the documents table is under 256 MiB — which caps any single
-# doc's list at the same 256 MiB worst case (one doc owning the whole
-# input).  Past the threshold the LSH branch builds lists for
-# CANDIDATE docs only.  lexical_semantic_rrf's by_doc frame is NOT
-# behind this switch (retrieval has no LSH fallback) — its docstring
-# carries the scratch-parquet escape hatch — and a deployment with
-# individual multi-GiB docs should bound doc length upstream (the
-# curation length screen) before shingling anywhere.
+# cap bounds candidate PAIRS, not list length.  The exact-join
+# operators (_exact_pairs / _incremental_near_exact) read the list
+# index ONLY on this exact branch, i.e. only while the documents table
+# is under 256 MiB — which caps any single doc's list at the same
+# 256 MiB worst case (one doc owning the whole input).  Past the
+# threshold the LSH branch builds lists for CANDIDATE docs only.  The
+# prefix-filter family and lexical_semantic_rrf read the index at any
+# size (they have no LSH fallback), so a deployment with individual
+# multi-GiB docs should bound doc length upstream (the curation
+# length screen) before shingling anywhere.
 NEARDUP_EXACT_MAX_BYTES = 256 * 1024 * 1024
-
-# One persisted DataFrame per (session, sf_dir, tag): re-invoking the
-# operator unpersists the previous cache first, so long sessions
-# (bench reps, test sweeps) never accumulate stale cached copies.
-_PERSISTED: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _persist_tracked(
-    df: DataFrame, spark: SparkSession, sf_dir: str, tag: str
-) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    prev = _PERSISTED.pop(key, None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:  # noqa: BLE001 — session may be gone
-            pass
-    out = df.persist()
-    _PERSISTED[key] = out
-    return out
-
 
 def _input_bytes(
     sf_dir: str, name: str, spark: SparkSession | None = None
@@ -167,6 +146,82 @@ def _shingles(
     return out.distinct() if distinct else out
 
 
+def _stored(
+    spark: SparkSession, sf_dir: str, kind: str, params: tuple, build
+) -> DataFrame:
+    """``build()``, a frame derived from ``documents``, lazily
+    localCheckpointed and served from the build-once store until the
+    table is rewritten: the first action that reads it materializes the
+    blocks, every later reader reuses them.  A checkpoint, not a
+    persist: ``spark.catalog.clearCache()`` cannot drop it, and a
+    rebuild after a rewrite cannot match a stale cached plan of the
+    same path.  Callers never release the frame they are served."""
+    return _artifact(
+        spark, sf_dir, "documents", kind, params,
+        lambda: build().localCheckpoint(eager=False),
+    )
+
+
+def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one per-doc shingle-list index: (doc_id, n, s) where ``s``
+    is the doc's distinct 3-gram shingles as (df, shingle) structs in
+    ascending global document frequency (rarest first, ties by
+    shingle) and ``n`` their number.  Docs with no shingle are absent.
+
+    Shuffle shape: the corpus-wide shingle stream moves exactly twice.
+    One hash-repartition on the shingle clusters (doc_id, shingle), so
+    the per-doc ``dropDuplicates`` aggregates in place and df is a
+    count over a shingle window on the same partitioning (one local
+    sort, no df agg joined back); then the doc-keyed agg sorts each
+    doc's list.  Earlier shapes, measured and retired (SCALE.md
+    "prefix-frames 2-exchange rework"): a window plus a separate sizes
+    agg and join, and a distinct -> df groupBy -> join chain that
+    exchanged the stream four times and broadcast the corpus-linear
+    vocabulary.  The shingle shuffle carries pre-distinct rows; word
+    3-gram duplication within a doc is a few percent.
+
+    Built once per documents file (see :func:`_stored`), so the
+    near-dup, prefix-filter and retrieval operators share one shingle
+    pass per session.  A df-capped view is :func:`_shingle_lists`.
+    The list is doc-length-bounded (the mega-doc note at
+    NEARDUP_EXACT_MAX_BYTES)."""
+    width = _prefix_width(sf_dir, spark)
+
+    def build():
+        shd = (
+            _shingles(spark, sf_dir, distinct=False)
+            .repartition(width, "shingle")
+            .dropDuplicates(["doc_id", "shingle"])
+        )
+        df = F.count("*").over(Window.partitionBy("shingle")).cast("long")
+        return (
+            shd.withColumn("df", df)
+            .groupBy("doc_id")
+            .agg(F.sort_array(F.collect_list(F.struct("df", "shingle"))).alias("s"))
+            .select("doc_id", F.size("s").cast("long").alias("n"), "s")
+        )
+
+    return _stored(spark, sf_dir, "doc_shingles", (width,), build)
+
+
+def _shingle_lists(
+    spark: SparkSession, sf_dir: str, df_cap: int | None = None
+) -> DataFrame:
+    """(doc_id, n, s): each doc's distinct shingles with df <= ``df_cap``
+    (all of them without a cap) as an array of strings, and ``n`` their
+    number — a projection of :func:`_doc_shingles`.  A doc whose every
+    shingle is capped away keeps a row with n = 0 and an empty list,
+    which explodes to nothing."""
+    s = F.col("s")
+    if df_cap is not None:
+        s = F.filter(s, lambda e: e["df"] <= df_cap)
+    return (
+        _doc_shingles(spark, sf_dir)
+        .select("doc_id", s.getField("shingle").alias("s"))
+        .select("doc_id", F.size("s").cast("long").alias("n"), "s")
+    )
+
+
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: group identical normalized text, keep the smallest
     doc_id (map: emit (fingerprint, doc_id); reduce: min + count)."""
@@ -196,39 +251,16 @@ def _exact_pairs(
     operator).  Cost is O(Σ min(df, cap)²) — fine below
     NEARDUP_EXACT_MAX_BYTES, super-linear past it (use the LSH path).
 
-    r17 rework (guide §2.3/§2.4 — one pass, exchanges not re-runs):
-    the former shape re-executed the tokenize + explode + distinct
-    pipeline once per consumer (df-cap build, the cap join back, the
-    per-doc counts, and BOTH self-join sides — 4-5 corpus passes) and
-    shipped the per-doc sizes back in via two pair-keyed joins.  Now
-    ONE repartition on the shingle clusters the stream; the (doc,
-    shingle) distinct and the df count-over-window run in place (no df
-    agg exchange, no vocab-keyed cap join); one doc-keyed agg builds
-    the capped per-doc shingle lists; and that one-row-per-doc frame
-    is CHECKPOINTED once — both self-join sides explode it, carrying
-    their doc's size through the pair agg as group keys, so the two
-    size joins are gone.  Same shingle sets, same int/int division —
-    pair-for-pair identical output (interleaved A/B + the oracle gate
-    at both SFs); the shingle stream now crosses the wire exactly
-    twice (shingle clustering, then the pair self-join), plus the
-    doc-keyed list agg.
+    The per-doc lists come from the stored shingle-list index
+    (:func:`_shingle_lists` over :func:`_doc_shingles`): the cap is an
+    in-row filter on each list's df, and both self-join sides explode
+    the lists, carrying their doc's size through the pair agg as group
+    keys, so no size join exists.  The index is built once per
+    documents file and session; a warm call moves only the pair
+    self-join.  Same shingle sets, same int/int division as the
+    oracle.
     """
-    width = _prefix_width(sf_dir, spark)
-    shd = (
-        _shingles(spark, sf_dir, distinct=False)
-        .repartition(width, "shingle")
-        .dropDuplicates(["doc_id", "shingle"])
-    )
-    if df_cap is not None:
-        shd = shd.withColumn(
-            "df", F.count("*").over(Window.partitionBy("shingle"))
-        ).filter(F.col("df") <= df_cap)
-    by_doc = (
-        shd.groupBy("doc_id")
-        .agg(F.collect_list("shingle").alias("s"))
-        .select("doc_id", F.size("s").cast("long").alias("n"), "s")
-        .localCheckpoint(eager=True)
-    )
+    by_doc = _shingle_lists(spark, sf_dir, df_cap)
     a = by_doc.select(
         F.col("doc_id").alias("da"),
         F.col("n").alias("na"),
@@ -243,8 +275,8 @@ def _exact_pairs(
     # value and per-key occupancy is bounded (df cap / small input), so
     # SMJ's two-sided sort of the corpus-linear shingle table is pure
     # waste (measured 3.2 -> 2.0 s at sf0.1); the hint also keeps the
-    # corpus-linear table off the broadcast path (the checkpointed
-    # by_doc frame has no size stats — unhinted, Catalyst would
+    # corpus-linear table off the broadcast path (the stored by_doc
+    # frame's size is only a plan estimate — unhinted, Catalyst would
     # broadcast a corpus-linear explode, the vcl_candidates lesson).
     inter = (
         a.hint("shuffle_hash")
@@ -431,21 +463,21 @@ def _lsh_verified_pairs(
     the self-join is on band buckets, never all-pairs.
 
     The shingle table feeds signature generation AND the verify joins
-    (4 consumers).  The shared projection is persisted behind a
+    (4 consumers).  The shared projection is stored (see _stored) behind a
     size-aware switch (SHINGLE_PERSIST_MIN_BYTES, checked against the
     on-disk input size): at local SFs the re-scan wins (order-controlled
     A/B in the constant's comment — the persist would force the distinct
     shuffle onto the signature path and pay materialization for KBs of
     input), at 100 TB running the corpus-scale tokenize + explode 4x
-    dominates and the persist wins.  When persisting, signatures derive
-    from the persisted distinct stream so all consumers share one
+    dominates and the stored frame wins.  When storing, signatures derive
+    from the stored distinct stream so all consumers share one
     materialization (min over a set == min over the multiset it came
-    from); on the no-persist path signatures use the NON-distinct
+    from); on the re-scan path signatures use the NON-distinct
     stream, skipping the distinct shuffle entirely.
     """
-    persist = _input_bytes(sf_dir, "documents", spark) >= SHINGLE_PERSIST_MIN_BYTES
-    if persist:
-        sh_all = _persist_tracked(_shingles(spark, sf_dir), spark, sf_dir, "shingles")
+    stored = _input_bytes(sf_dir, "documents", spark) >= SHINGLE_PERSIST_MIN_BYTES
+    if stored:
+        sh_all = _stored(spark, sf_dir, "shingles", (), lambda: _shingles(spark, sf_dir))
         sig_src = sh_all
     else:
         sh_all = None
@@ -474,7 +506,7 @@ def _lsh_verified_pairs(
         .union(cand.select(F.col("db").alias("doc_id")))
         .distinct()
     )
-    if persist:  # cached corpus-wide distinct projection: restrict it
+    if stored:  # stored corpus-wide distinct projection: restrict it
         sh = sh_all.join(cand_docs, "doc_id", "left_semi")
     else:  # restrict the raw stream BEFORE the distinct shuffle
         sh = (
@@ -906,37 +938,24 @@ def _incremental_near_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (uncapped), so driver parity is refresh-proof.  Used below
     NEARDUP_EXACT_MAX_BYTES, where the Σ df·df_batch cost is trivial.
 
-    r17: the _exact_pairs one-pass rework applied to the one-sided
-    form — one shingle-clustered repartition + in-place distinct, one
-    doc-keyed list agg, checkpoint; both join sides explode the
-    checkpointed lists with their doc's size carried through the pair
-    agg as group keys (the former shape re-ran the tokenize+distinct
-    pipeline for counts AND both sides, then joined sizes back per
-    pair — 3 corpus passes and 2 pair-keyed joins, now 1 pass and 0)."""
+    Both join sides explode the stored per-doc shingle lists
+    (:func:`_shingle_lists`, uncapped) with their doc's size carried
+    through the pair agg as group keys, so no size join exists."""
     is_batch = (F.col("doc_id") % BATCH_MOD) >= BATCH_THRESHOLD
-    width = _prefix_width(sf_dir, spark)
-    by_doc = (
-        _shingles(spark, sf_dir, distinct=False)
-        .repartition(width, "shingle")
-        .dropDuplicates(["doc_id", "shingle"])
-        .groupBy("doc_id")
-        .agg(F.collect_list("shingle").alias("sl"))
-        .select("doc_id", F.size("sl").cast("long").alias("n"), "sl")
-        .localCheckpoint(eager=True)
-    )
+    by_doc = _shingle_lists(spark, sf_dir)
     sa = by_doc.filter(is_batch).select(
         F.col("doc_id").alias("bd"),
         F.col("n").alias("na"),
-        F.explode("sl").alias("s"),
+        F.explode("s").alias("s"),
     )
     sb = by_doc.filter(~is_batch).select(
         F.col("doc_id").alias("cd"),
         F.col("n").alias("nb"),
-        F.explode("sl").alias("s"),
+        F.explode("s").alias("s"),
     )
     # shuffle-hash: both sides are corpus-linear shingle streams — no
     # ordering value in the key, nothing safely broadcastable (and the
-    # checkpointed by_doc explode has no size stats for Catalyst).
+    # stored by_doc explode has only a plan estimate for Catalyst).
     inter = (
         sa.hint("shuffle_hash")
         .join(sb, "s")
@@ -1461,81 +1480,27 @@ def _prefix_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Shared machinery of the prefix-filter family: the per-doc
-    SORTED shingle list frame ``by_doc`` (doc_id, n, s) and the
-    df-ranked PREFIX frame (doc_id, shingle, rn, n) — each doc's
-    first |x| - ceil(t|x|) + 1 shingles in ascending global-df order
-    (rarest first, ties by shingle).  ``rn`` is the 1-based position
-    in that canonical order, which is what the PPJoin positional
-    filter reads.
+    SORTED shingle list frame ``by_doc`` (doc_id, n, s) — the stored
+    :func:`_doc_shingles` index itself — and the df-ranked PREFIX frame
+    (doc_id, shingle, rn, n): each doc's first |x| - ceil(t|x|) + 1
+    shingles in ascending global-df order (rarest first, ties by
+    shingle).  ``rn`` is the 1-based position in that canonical order,
+    which is what the PPJoin positional filter reads.  The prefix is a
+    projection of the index: a warm call runs no shingle pipeline.
 
-    Shuffle shape (r11): the corpus-wide shingle stream moves exactly
-    TWICE — one explicit hash-repartition on the shingle that the
-    per-doc distinct AND the window-based df count both satisfy in
-    place, then the doc-keyed agg that builds the sorted per-doc list
-    (sort_array over (df, shingle) structs — identical order to a
-    row_number window over (df, shingle)); sizes and the prefix slice
-    are projections over it.  Earlier shapes, both measured and
-    retired: a window + separate sizes agg + sizes join (two extra
-    doc-keyed shuffles, 3.67 → ~2.7 s at sf0.1), then a distinct →
-    df groupBy → join-back chain (r10) that exchanged the stream four
-    times and whose join Catalyst planned as a BROADCAST of the
-    vocabulary-sized df table while re-executing the whole scan for
-    the build side — vocab is corpus-linear, the same scale-killer
-    class as the r10 ppjoin broadcast (see SCALE.md "prefix-frames
-    2-exchange rework" for the A/B).  The per-doc list is
-    doc-length-bounded — the same per-doc materialization every
-    shingle consumer already makes — and the verify stage consumes it
-    directly (see _jaccard_verify).
-
-    ``by_doc`` is PERSISTED (MEMORY_AND_DISK): four downstream
-    subplans read it (both sides of the candidate self-join via
-    ``pref``, both sides of the verify) and Catalyst's ReusedExchange
-    only covers the bit-identical pair, so without it the shingle
-    explode + df agg + doc agg pipeline executes twice end to end
-    (measured at sf0.1: prefix_filter_neardup 3.04 → 2.49 s min,
-    ppjoin/pagerank_docs inherit).  persist() beats localCheckpoint
-    here specifically because the InMemoryRelation KEEPS plan stats —
-    an eager-checkpoint draft turned the scans into unknown-size
-    ExistingRDDs and Catalyst broadcast the ENTIRE exploded prefix
-    table into the self-join (6.1 s and a scale-killer).  The cached
-    footprint is the same per-doc-list the agg already materializes;
-    at 100 TB swap for a scratch-parquet write if executor storage
-    memory is contended.
+    Four subplans read ``by_doc`` (both sides of the candidate
+    self-join via ``pref``, both sides of the verify).  It is a lazy
+    localCheckpoint whose scans carry the size estimate of the plan
+    that built it — about 0.6x the documents file (40 KB at sf0.01,
+    368 KB at sf0.1) — so the estimate grows with the corpus: at the
+    test SFs Catalyst broadcasts the per-doc lists into the verify
+    joins, past autoBroadcastJoinThreshold it shuffles them.  The
+    prefix x prefix self-join never depends on the estimate: it is a
+    shuffle-hash join at an explicit width (:func:`vcl_candidates`,
+    :func:`ppjoin_candidates`; sf0.1 plan: ShuffledHashJoin on the
+    shingle).
     """
-    # 2-exchange pipeline (r11, VERDICT r10 #6): ONE explicit
-    # hash-repartition on the shingle up front, then the per-doc
-    # distinct, the df computation, and nothing else before the final
-    # doc-keyed agg.  HashPartitioning(shingle) clusters (doc_id,
-    # shingle), so dropDuplicates aggregates in place, and df comes
-    # from a count-over-Window.partitionBy(shingle) on the SAME
-    # partitioning (one local sort, no exchange) instead of a separate
-    # df agg JOINED back.  The former distinct -> groupBy(shingle) ->
-    # join chain exchanged the corpus-wide shingle table four times —
-    # and worse, Catalyst elected to BROADCAST the vocabulary-sized df
-    # table into the join at test SFs (vocab is corpus-linear: a
-    # scale-killer plan shape, the ppjoin-broadcast lesson) while
-    # re-executing the whole scan pipeline to build it.  Now the
-    # corpus moves exactly twice (shingle, then doc_id), one scan, no
-    # join.  Cost: the shingle shuffle carries pre-distinct rows (no
-    # map-side partial distinct) — word-3-gram duplication within a
-    # doc is a few percent, far below an extra corpus-wide exchange.
-    # Hot-shingle skew exposure is unchanged: the df agg concentrated
-    # hot shingles onto one partition identically, and candidate joins
-    # cap them via HOT_SHINGLE_DF_CAP / the prefix slice downstream.
-    width = _prefix_width(sf_dir, spark)
-    sh = _shingles(spark, sf_dir, distinct=False).repartition(width, "shingle")
-    shd = sh.dropDuplicates(["doc_id", "shingle"])
-    by_doc = (
-        shd.withColumn(
-            "df", F.count("*").over(Window.partitionBy("shingle")).cast("long")
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("df", "shingle"))).alias("s")
-        )
-        .select("doc_id", F.size("s").cast("long").alias("n"), "s")
-        .persist()
-    )
+    by_doc = _doc_shingles(spark, sf_dir)
     prefix_len = (
         F.col("n") - F.ceil(F.lit(PREFIX_JACCARD_T) * F.col("n")) + 1
     ).cast("int")
@@ -1559,8 +1524,8 @@ def vcl_candidates(pref: DataFrame, width: int | None = None) -> DataFrame:
     Both sides are explicitly repartitioned on the join key at a
     pinned width (the embedding_neardup_strict lesson, VERDICT r9 #6)
     and the join is pinned to a shuffle-hash join: the prefix frame
-    reads from a cached relation whose pre-materialization size
-    Catalyst can't always estimate, and an unguarded plan broadcast
+    reads the stored shingle-list index, whose size Catalyst only
+    estimates, and an unguarded plan broadcast
     the ENTIRE exploded prefix table into the self-join (measured
     6.1 s at sf0.1 — a single-threaded hash-table build, and a
     scale-killer: the prefix table grows with the corpus).  The
@@ -1611,8 +1576,8 @@ def ppjoin_candidates(pref: DataFrame, width: int | None = None) -> DataFrame:
     join output.
 
     Width-pinned shuffle join on the shingle, as in
-    :func:`vcl_candidates` (the checkpointed prefix frame has no
-    size stats, and the unguarded plan broadcasts the full prefix
+    :func:`vcl_candidates` (the prefix frame's size is only an
+    estimate, and the unguarded plan broadcasts the full prefix
     table into the self-join — wrong at any scale past toy).
     ``width`` as in :func:`vcl_candidates`.
     """
@@ -1662,8 +1627,8 @@ def _jaccard_verify(
     width: int | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verify of a candidate pair set, ARRAY form: each
-    candidate pair joins the two per-doc sorted shingle lists (already
-    materialized by _prefix_frames) and the intersection is one
+    candidate pair joins the two per-doc sorted shingle lists (the
+    stored _doc_shingles index) and the intersection is one
     map-side ``size(array_intersect(sa, sb))`` — int/int division
     after it, bit-identical across engines, no rounding pre-filter.
 

@@ -22,14 +22,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import bigrams_expr, tokens_expr
-from ..sources.tables import fan_out, load_table
+from ..sources.tables import _artifact, fan_out, load_table
 from .dedup import (
     HOT_SHINGLE_DF_CAP,
     SHINGLE_PERSIST_MIN_BYTES,
     _input_bytes,
-    _persist_tracked,
     _release_checkpoint,
     _rounds,
+    _stored,
 )
 
 # Tiny embedded English stopword list used by the language-ID heuristic
@@ -144,7 +144,7 @@ def word_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the event stream is |tokens|·W rows produced inside whole-stage
     codegen, then two algebraic hash-aggs (pair counts, unigram counts)
     and one broadcast of the two scalar totals, which re-aggregate the
-    agg tables (sum of counts == event count) — persisted behind a
+    agg tables (sum of counts == event count) — checkpointed behind a
     size-aware switch so a corpus-scale input is scanned exactly twice.
     At 100 TB: event volume is linear in corpus tokens
     (W is a constant), both aggs get map-side partials, and the
@@ -186,20 +186,20 @@ def word_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size-aware switch as the minhash shingle projection (re-scan wins
     # at local input sizes — measured 0.98 s vs 2.1 s at sf0.1, cache
     # materialization dominating; at 100 TB two extra corpus passes
-    # dominate everything), the two agg tables are persisted, pinning
-    # the corpus to exactly two scans; both are aggregate-sized
-    # (distinct pairs / vocabulary), far below corpus scale, and
-    # MEMORY_AND_DISK spills if a 100 TB vocabulary outgrows memory.
-    persist = _input_bytes(sf_dir, "documents", spark) >= SHINGLE_PERSIST_MIN_BYTES
+    # dominate everything), the two agg tables are stored checkpoints,
+    # pinning the corpus to exactly two scans; both are aggregate-sized
+    # (distinct pairs / vocabulary), far below corpus scale, and the
+    # local checkpoint spills to disk if a 100 TB vocabulary outgrows
+    # memory.
     pc_all = ev.groupBy("wa", "wb").agg(F.count("*").alias("n_cooc"))
     uni = (
         toks.select(F.explode("t").alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
-    if persist:
-        pc_all = _persist_tracked(pc_all, spark, sf_dir, "pmi_pairs")
-        uni = _persist_tracked(uni, spark, sf_dir, "pmi_uni")
+    if _input_bytes(sf_dir, "documents", spark) >= SHINGLE_PERSIST_MIN_BYTES:
+        pc_all = _stored(spark, sf_dir, "pmi_pairs", (), lambda pc=pc_all: pc)
+        uni = _stored(spark, sf_dir, "pmi_uni", (), lambda u=uni: u)
     pc = pc_all.filter(F.col("n_cooc") >= PMI_MIN_COUNT)
     tot = pc_all.agg(F.sum("n_cooc").cast("double").alias("P")).crossJoin(
         uni.agg(F.sum("c").cast("double").alias("T"))
@@ -490,20 +490,21 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..session import two_pass_rank_width
 
+    width = two_pass_rank_width(spark)
     ranged = freq.repartitionByRange(
-        two_pass_rank_width(spark), F.col("c").desc(), F.col("w").asc()
+        width, F.col("c").desc(), F.col("w").asc()
     ).sortWithinPartitions(F.col("c").desc(), F.col("w").asc())
     with_pid = ranged.withColumn("_pid", F.spark_partition_id())
     w_local = Window.partitionBy("_pid").orderBy(F.desc("c"), F.asc("w"))
     local = with_pid.withColumn("_local_rn", F.row_number().over(w_local))
     # the ranked table feeds TWO consumers (the offset counts and the
     # final join) and branch-specific optimization defeats exchange
-    # reuse — without the persist the offsets branch re-runs the whole
-    # corpus tokenize+explode+agg (verified on the plan).  The persist
+    # reuse — without the stored checkpoint the offsets branch re-runs
+    # the whole corpus tokenize+explode+agg (verified on the plan).  It
     # is vocab-sized, safe to materialize at any corpus scale.
     # (Contrast relational.global_rank, where the double-consumed input
     # is a bare 2-column parquet scan and re-scanning beats caching.)
-    local = _persist_tracked(local, spark, sf_dir, "zipf_ranked")
+    local = _stored(spark, sf_dir, "zipf_ranked", (width,), lambda r=local: r)
     counts = local.groupBy("_pid").agg(F.count("*").alias("_n"))
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.withColumn(
@@ -676,40 +677,48 @@ BM25_DF_CAP_FRAC = 0.9
 
 
 def _bm25_index(spark: SparkSession, sf_dir: str):
-    """The shared BM25 index build (bm25_topk + bm25_pruned_topk):
-    returns (n_docs, avgdl, tf, df_) — corpus size, average doc
+    """The shared BM25 index (bm25_topk + bm25_pruned_topk + the
+    lexical legs): (n_docs, avgdl, tf, df_) — corpus size, average doc
     length (exact int/int IEEE division of driver-collected integer
-    scalars), the persisted (doc_id, dl, word, tf) inverted index, and
-    the per-word document frequencies — or None on an empty corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()
-    if n_docs == 0:
-        return None
-    toks = _docs_tokens(spark, sf_dir)
-    # dl(d) == size of d's token array == sum of tf over d's words: the
-    # doc length rides the tf shuffle as a functionally-dependent key,
-    # so NO separate doc-length agg or doc_id join exists in the plan
-    # (the first cut's dl chain re-ran the tokenize pipeline and joined
-    # corpus-side — measured 11.3 s -> ~4 s at sf0.1 with this shape).
-    total_tokens = (
-        toks.agg(F.sum(F.size("tokens"))).collect()[0][0] or 0
-    )  # one map-only scan; no tokenize re-run hides behind an agg table
-    avgdl = total_tokens / n_docs  # exact int/int IEEE division
-    pairs = toks.select(
-        "doc_id", F.size("tokens").cast("long").alias("dl"),
-        F.explode("tokens").alias("word"),
-    )
-    # Persisted UNCONDITIONALLY (unlike the size-gated corpus-linear
-    # shingle frames): tf is aggregate-sized (distinct (doc, word)
-    # pairs — vocabulary-bounded per doc) and THREE branches plus the
-    # driver never re-run the tokenize pipeline; branch-specific
-    # optimization defeats exchange reuse here (the documented gotcha).
-    tf = _persist_tracked(
-        pairs.groupBy("doc_id", "dl", "word").agg(F.count("*").alias("tf")),
-        spark, sf_dir, "bm25_tf",
-    )
-    df_ = tf.groupBy("word").agg(F.count("*").alias("df"))
-    return n_docs, avgdl, tf, df_
+    scalars), the checkpointed (doc_id, dl, word, tf) inverted index,
+    and the per-word document frequencies — or None on an empty
+    corpus.  Built once per documents file through the build-once
+    store, so a warm call collects no scalar and re-runs no tokenize."""
+
+    def build():
+        n_docs = load_table(spark, sf_dir, "documents").count()
+        if n_docs == 0:
+            return None
+        toks = _docs_tokens(spark, sf_dir)
+        # dl(d) == size of d's token array == sum of tf over d's words:
+        # the doc length rides the tf shuffle as a functionally-dependent
+        # key, so NO separate doc-length agg or doc_id join exists in the
+        # plan (the first cut's dl chain re-ran the tokenize pipeline and
+        # joined corpus-side — measured 11.3 s -> ~4 s at sf0.1 with
+        # this shape).
+        total_tokens = (
+            toks.agg(F.sum(F.size("tokens"))).collect()[0][0] or 0
+        )  # one map-only scan; no tokenize re-run hides behind an agg table
+        avgdl = total_tokens / n_docs  # exact int/int IEEE division
+        pairs = toks.select(
+            "doc_id", F.size("tokens").cast("long").alias("dl"),
+            F.explode("tokens").alias("word"),
+        )
+        # Checkpointed UNCONDITIONALLY (unlike the size-gated
+        # corpus-linear shingle frames): tf is aggregate-sized (distinct
+        # (doc, word) pairs — vocabulary-bounded per doc) and THREE
+        # branches plus the driver never re-run the tokenize pipeline;
+        # branch-specific optimization defeats exchange reuse here (the
+        # documented gotcha).
+        tf = (
+            pairs.groupBy("doc_id", "dl", "word")
+            .agg(F.count("*").alias("tf"))
+            .localCheckpoint(eager=False)
+        )
+        df_ = tf.groupBy("word").agg(F.count("*").alias("df"))
+        return n_docs, avgdl, tf, df_
+
+    return _artifact(spark, sf_dir, "documents", "bm25_index", (), build)
 
 
 def _bm25_idf(n_docs: int):
@@ -762,10 +771,10 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic half; lexical_semantic_rrf fuses the two spaces).
 
     Scale shape (100 TB): the tf table (one row per (doc, word)) is the
-    inverted index — built with one explode + hash-agg, persisted
-    because THREE branches plus the driver read it (document
-    frequencies, the postings side of the candidate join, and the query
-    projection).  The query side (query terms x attached df, bounded by
+    inverted index — built with one explode + hash-agg, checkpointed
+    once per documents file because THREE branches plus the driver
+    read it (document frequencies, the postings side of the candidate
+    join, and the query projection).  The query side (query terms x attached df, bounded by
     |queries| x query vocabulary) is BROADCAST into the postings join,
     so the corpus-sized side never shuffles for the join; candidate
     volume is sum over kept query terms of df(t), bounded by the df cap.
@@ -825,7 +834,7 @@ def bm25_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     short docs survive; low-impact tail postings are the ones cut);
     the win is a hard per-term candidate bound.
 
-    Scale shape: the prune is one per-word window over the persisted
+    Scale shape: the prune is one per-word window over the stored
     tf index that prunes map-side via WindowGroupLimit (Zipf-hot words
     are exactly the ones the cap truncates hardest), and everything
     downstream runs on the <= vocab x CAP pruned index instead of the
@@ -873,58 +882,25 @@ def lexical_semantic_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact divisions (commutative — order-free), and all rank ties
     break on doc_id.
 
-    Scale shape (r17 rework — guide §2.3/§2.4: one pass, fewer
-    exchanges): the former shape re-executed the shingle pipeline
-    (tokenize + explode + a (doc, shingle) distinct SHUFFLE + a df agg
-    SHUFFLE + a vocab-keyed hot-cap join) once per consumer — doc
-    sizes, the broadcast query side, and the candidate join; at local
-    SFs that was ~3x a 40 MB shingle shuffle, at 100 TB 3x a
-    corpus-scale one.  Now ONE repartition on the shingle clusters the
-    stream so the per-doc distinct AND the df count-over-window both
-    run in place (the _prefix_frames 2-exchange discipline; the hot
-    cap becomes a row-local filter on the windowed df — the former
-    vocab-sized df JOIN is gone), one doc-keyed agg builds the capped
-    per-doc shingle LISTS, and that one-row-per-doc frame is
-    checkpointed for all three consumers: sizes are ``size(s)``
-    projections carried THROUGH the candidate join as group keys (the
-    two former size joins are gone), the query side explodes the
-    <BM25_N_QUERIES slice (broadcast-bounded as before), and the
-    candidate join explodes the checkpointed lists instead of
+    Scale shape: the capped per-doc shingle lists are a projection of
+    the stored shingle-list index (dedup._shingle_lists over
+    dedup._doc_shingles — one shingle pass per documents file, shared
+    with the near-dup operators; the hot cap is an in-row filter on
+    each list's df).  Sizes are ``size(s)`` projections carried
+    THROUGH the candidate join as group keys (no size join), the query
+    side explodes the <BM25_N_QUERIES slice (broadcast-bounded), and
+    the candidate join explodes the stored lists instead of
     re-tokenizing the corpus.  Candidate volume is bounded by the df
     cap exactly as in ngram_jaccard_neardup, and both per-query
     rankings prune map-side via WindowGroupLimit before their single
     qid exchange.  Same capped shingle sets -> same exact rationals ->
-    the oracle gate is unchanged (verified at sf0.01 and sf0.1).  At
-    100 TB the checkpointed per-doc frame is the same materialization
-    every shingle consumer already makes; swap for a scratch-parquet
-    write if executor storage is contended (the by_doc caveat).
+    the oracle gate is unchanged.
     """
-    from .dedup import _prefix_width, _shingles
+    from .dedup import _shingle_lists
     from .similarity import RRF_K
 
     bm = bm25_topk(spark, sf_dir).select("qid", "doc_id", F.col("rn").alias("rb"))
-    width = _prefix_width(sf_dir, spark)
-    shd = (
-        _shingles(spark, sf_dir, n=3, distinct=False)
-        .repartition(width, "shingle")
-        .dropDuplicates(["doc_id", "shingle"])
-    )
-    by_doc = (
-        shd.withColumn(
-            "df", F.count("*").over(Window.partitionBy("shingle"))
-        )
-        .filter(F.col("df") <= HOT_SHINGLE_DF_CAP)
-        .groupBy("doc_id")
-        .agg(F.collect_list("shingle").alias("s"))
-        .select("doc_id", F.size("s").cast("long").alias("n"), "s")
-        # LAZY checkpoint (ADVICE r17): both consumers sit inside the
-        # one final fused query, whose first execution materializes the
-        # blocks once — the eager form paid a separate corpus-sized
-        # materialization job before any consumer ran, unconditionally
-        # pinning state even for tiny inputs.  Lineage is still
-        # truncated either way (the plan-size point of the checkpoint).
-        .localCheckpoint(eager=False)
-    )
+    by_doc = _shingle_lists(spark, sf_dir, HOT_SHINGLE_DF_CAP)
     qsh = by_doc.filter(F.col("doc_id") < BM25_N_QUERIES).select(
         F.col("doc_id").alias("qid"),
         F.col("n").alias("nq"),
@@ -984,8 +960,8 @@ def bm25_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     high — the two fixtures bracket the CAP <-> recall trade.
 
     Scale shape: all inputs are already-bounded (|queries| x k)-row
-    rank lists sharing ONE persisted tf index (_persist_tracked key
-    dedup), so the intersections, aggs, and left joins are
+    rank lists sharing ONE stored tf index (the build-once store's
+    bm25_index entry), so the intersections, aggs, and left joins are
     query-set-sized regardless of corpus size.  Exactness: counts are
     integers; recall is one exact int/int IEEE division.
     """

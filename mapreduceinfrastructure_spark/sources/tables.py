@@ -110,17 +110,25 @@ def _raise(err: OSError):
 
 
 # Build-once store for what is derived from a table file and reused
-# while the file is unchanged: each table's inferred schema ("schema")
-# and the search artifacts a production index builds once per corpus
-# and serves to every query (similarity.py: the IVF coarse quantizer,
-# the residual frame, the PQ code frames, the bounded query set and the
-# trained PQ codebooks).  Key: (Spark application id, artifact kind,
-# sf_dir, table, table fingerprint, params).  The application id scopes
-# the DataFrame handles, whose localCheckpoint blocks live on that
-# context's executors; the fingerprint invalidates an entry when the
-# table at sf_dir is rewritten in-process; ``params`` holds whatever
-# else the artifact depends on (never Python hash() of values).  None
-# is a cached value (an empty corpus is not re-collected).
+# while the file is unchanged: each table's inferred schema ("schema"),
+# the search artifacts a production index builds once per corpus and
+# serves to every query (similarity.py: the IVF coarse quantizer, the
+# residual frame, the PQ code frames, the bounded query set and the
+# trained PQ codebooks), and the frames derived from ``documents``
+# (dedup.py: the per-doc shingle-list index and the size-gated shingle
+# projection; text_analysis.py: the BM25 index, the PMI tables and the
+# ranked Zipf vocabulary).  The package's only memo.  Every DataFrame
+# value is a localCheckpoint, never a persist(): clearCache() would
+# silently un-cache a persisted entry, and a persisted frame rebuilt
+# after a rewrite could match the stale cached plan of the same path.
+# Nobody releases a frame the store served.  Key: (Spark application
+# id, artifact kind, sf_dir, table, table fingerprint, params).  The
+# application id scopes the DataFrame handles, whose localCheckpoint
+# blocks live on that context's executors; the fingerprint invalidates
+# an entry when the table at sf_dir is rewritten in-process; ``params``
+# holds whatever else the artifact depends on (never Python hash() of
+# values).  None is a cached value (an empty corpus is not
+# re-collected).
 _ARTIFACTS: dict[tuple, object] = {}
 
 
@@ -150,7 +158,7 @@ def _artifact(
 
 
 def artifact_reset() -> None:
-    """Drop every memoized table schema and search artifact."""
+    """Drop every memoized table schema, search artifact and derived frame."""
     _ARTIFACTS.clear()
 
 

@@ -93,6 +93,72 @@ def test_rewritten_corpus_rebuilds_and_drops_old_entry(
     assert any(k[2] == str(other) for k in store)
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_rewritten_documents_rebuild_derived_frames(spark, sf_dir, tmp_path):
+    """The frames derived from ``documents`` (the per-doc shingle-list
+    index, the BM25 index) follow a rewrite of the table in the same
+    session: after documents.parquet loses half its rows, each reader
+    returns what it returns with the cache cleared and the store empty,
+    not the frame built from the old file."""
+    from mapreduceinfrastructure_spark.operators.dedup import (
+        ngram_jaccard_neardup,
+        ppjoin_neardup,
+        prefix_filter_neardup,
+    )
+    from mapreduceinfrastructure_spark.operators.text_analysis import bm25_topk
+
+    queries = (ppjoin_neardup, prefix_filter_neardup, ngram_jaccard_neardup, bm25_topk)
+    path = tmp_path / "documents.parquet"
+    docs = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs.to_parquet(path, index=False)
+    corpus = str(tmp_path)
+    before = {q.__name__: _rows(q(spark, corpus)) for q in queries}
+
+    docs.iloc[: len(docs) // 2].to_parquet(path, index=False)
+    after = {q.__name__: _rows(q(spark, corpus)) for q in queries}
+    spark.catalog.clearCache()
+    for k in [k for k in tables._ARTIFACTS if k[2] == corpus]:
+        del tables._ARTIFACTS[k]
+    fresh = {q.__name__: _rows(q(spark, corpus)) for q in queries}
+    assert after == fresh
+    assert before["ppjoin_neardup"] != fresh["ppjoin_neardup"]
+
+
+def _persisted(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _frame_entries() -> set[tuple]:
+    return {k for k in tables._ARTIFACTS if k[1] != "schema"}
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["neardup_pairs", "incremental_dedup", "lexical_semantic_rrf", "ppjoin_neardup"],
+)
+def test_repeated_calls_keep_only_store_entries(spark, sf_dir, name):
+    """Three calls of a reader of the shingle-list index keep no
+    checkpointed or cached RDD per call: what they add to the session's
+    persistent RDDs is at most one per frame entry they put in the
+    build-once store (none once the store is warm)."""
+    from mapreduceinfrastructure_spark.operators import dedup, text_analysis
+
+    call = {
+        "neardup_pairs": lambda: dedup.neardup_pairs(spark, sf_dir, threshold=0.5),
+        "incremental_dedup": lambda: dedup.incremental_dedup(spark, sf_dir),
+        "lexical_semantic_rrf": lambda: text_analysis.lexical_semantic_rrf(spark, sf_dir),
+        "ppjoin_neardup": lambda: dedup.ppjoin_neardup(spark, sf_dir),
+    }[name]
+    entries, before = _frame_entries(), _persisted(spark)
+    for _ in range(3):
+        assert call().collect()
+    added = _persisted(spark) - before
+    assert len(added) <= len(_frame_entries() - entries), (name, added)
+
+
 def test_missing_corpus_builds_every_call(store, tmp_path):
     spark = _session("app-1")
     build, calls = _builder("v")

@@ -191,14 +191,16 @@ def _diameter_pairs(spark, sf_dir):
 
 # The seven frame-state loops on the shared round driver: each one's
 # warm job cap on the test corpus (the count before the driver in the
-# comment) and the input builder whose retained blocks it may keep.
+# comment, then the count before the stored shingle-list index where
+# that index removed jobs) and the input builder whose retained blocks
+# it may keep.
 LOOPS = {
     "pagerank_nations": (30, trade_edges),  # 67
-    "pagerank_docs": (20, ppjoin_pairs_raw),  # 26
+    "pagerank_docs": (18, ppjoin_pairs_raw),  # 26, 20
     "sssp_parts": (17, copurchase_weighted),  # 23
     "kcore_peel": (20, copurchase_edges),  # 44
     "label_prop_iterate": (31, trade_edges),  # 39
-    "cluster_diameter": (30, _diameter_pairs),  # 31
+    "cluster_diameter": (26, _diameter_pairs),  # 31, 30
     "bpe_merges": (62, _docs_tokens),  # 63
 }
 

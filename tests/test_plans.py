@@ -335,7 +335,7 @@ def test_embedding_outliers_centroids_broadcast(spark, sf_dir):
     assert shuffle_count(df) <= 4
 
 
-def test_zipf_slope_regression_over_vocab_only(spark, sf_dir):
+def test_zipf_slope_regression_over_vocab_only(spark, sf_dir, monkeypatch):
     """The corpus is touched exactly once (token explode + freq agg);
     everything after runs over the VOCAB table with the TWO-PASS rank:
     range partition on the sort key (never a global single-partition
@@ -343,16 +343,30 @@ def test_zipf_slope_regression_over_vocab_only(spark, sf_dir):
     offset table — ~8 rows — broadcast back.  The offset prefix-sum's
     single-partition window over those 8 rows is the only unkeyed
     window allowed."""
+    from mapreduceinfrastructure_spark.operators import text_analysis
+
+    built = {}
+
+    def unstored(spark, sf_dir, kind, params, build):
+        built[kind] = build()
+        return built[kind]
+
+    # the ranked vocab as built, before the store checkpoints it
+    monkeypatch.setattr(text_analysis, "_stored", unstored)
+    QUERIES["zipf_slope"](spark, sf_dir)
+    monkeypatch.undo()
+    ranked = built["zipf_ranked"]._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" in ranked  # two-pass rank, not global window
+
     df = QUERIES["zipf_slope"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    assert "rangepartitioning" in plan  # two-pass rank, not global window
     assert has_broadcast_join(df)  # offsets ride a broadcast
-    # the ranked vocab is persisted, so BOTH consumers (offset counts
-    # and the final join) read the cache instead of re-running the
-    # corpus tokenize (the rangepartitioning string recurs only inside
-    # the cached relation's embedded build plan, once per reference)
-    assert plan.count("InMemoryTableScan") >= 2
+    # the ranked vocab is a stored checkpoint, so BOTH consumers (offset
+    # counts and the final join) read it instead of re-running the
+    # corpus tokenize: no parquet scan is left in the plan
+    assert plan.count("Scan ExistingRDD") >= 2
+    assert "FileScan" not in plan
 
 
 def test_weighted_sample_window_group_limit_prunes(spark, sf_dir):
@@ -465,9 +479,10 @@ def test_bm25_topk_plan_shape(spark, sf_dir):
     """Scale pins for the BM25 posting-list join (r13): the bounded
     query-terms side must be the BROADCAST HASH side of the candidate
     join (a corpus-side broadcast or any nested-loop pairing would be
-    the scale-killer), the persisted tf index must feed its consumers
-    from memory (InMemoryTableScan — branch-specific optimization
-    defeats exchange reuse here), the per-qid top-k must prune
+    the scale-killer), the stored tf index must feed its consumers
+    from its checkpoint (Scan ExistingRDD and no parquet scan —
+    branch-specific optimization defeats exchange reuse here, so
+    without it each branch re-runs the tokenize), the per-qid top-k must prune
     map-side (WindowGroupLimit), and no sort-merge join may appear
     anywhere (nothing in this plan should co-shuffle two large
     sides)."""
@@ -477,7 +492,7 @@ def test_bm25_topk_plan_shape(spark, sf_dir):
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan
     assert "WindowGroupLimit" in plan
-    assert "InMemoryTableScan" in plan
+    assert "Scan ExistingRDD" in plan and "Scan parquet" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "SortMergeJoin" not in plan
 
@@ -580,7 +595,8 @@ def test_pq_recall_report_plan_shape(spark, sf_dir):
 
 def test_bm25_recall_report_plan_shape(spark, sf_dir):
     """Scale pins for the r14 lexical recall audit: the three rank
-    lists share ONE persisted tf index (InMemoryTableScan present),
+    lists share ONE stored tf index (read from its checkpoint: Scan
+    ExistingRDD present, no parquet scan),
     candidate joins stay broadcast-hash (no corpus-side nested-loop
     pairing), and per-qid top-ks prune map-side.  SortMergeJoin is
     allowed ONLY for lexical_semantic_rrf's bounded <=|q|x2k
@@ -592,7 +608,7 @@ def test_bm25_recall_report_plan_shape(spark, sf_dir):
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan
     assert "WindowGroupLimit" in plan
-    assert "InMemoryTableScan" in plan
+    assert "Scan ExistingRDD" in plan and "Scan parquet" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 

@@ -218,6 +218,19 @@ def test_minhash_shingle_persist_switch_is_result_invariant(spark, sf_dir, monke
     assert len(base) > 0
 
 
+def test_pmi_stored_tables_switch_is_result_invariant(spark, sf_dir, monkeypatch):
+    """word_pmi's size-gated stored pair and unigram tables (on at
+    >=256 MB input, off at test SFs) must not change results: force
+    them by dropping the threshold to zero."""
+    from mapreduceinfrastructure_spark.operators import text_analysis as ta
+
+    base = set(map(tuple, ta.word_pmi(spark, sf_dir).collect()))
+    monkeypatch.setattr(ta, "SHINGLE_PERSIST_MIN_BYTES", 0)
+    forced = set(map(tuple, ta.word_pmi(spark, sf_dir).collect()))
+    assert forced == base
+    assert len(base) > 0
+
+
 def test_lsh_bucket_width_adapts_to_corpus():
     """BITS_PER_TABLE is now adaptive: fixed floor 4 through every test
     SF (hash stability), growing ~log2(n / TARGET_OCCUPANCY) beyond so
@@ -560,21 +573,15 @@ def test_prefix_candidate_joins_are_shuffle_not_broadcast(spark, sf_dir):
     )
 
     _, pref = _prefix_frames(spark, sf_dir)
-    try:
-        for gen in (vcl_candidates, ppjoin_candidates):
-            plan = gen(pref)._jdf.queryExecution().executedPlan().toString()
-            # the OUTERMOST shingle join is the prefix x prefix
-            # candidate self-join (deeper shingle joins — dfreq onto the
-            # shingle stream inside _prefix_frames — are unhinted key
-            # joins AQE may legitimately broadcast at runtime from
-            # measured vocab size); only the self-join is pinned
-            shingle_joins = [
-                l for l in plan.splitlines() if "Join" in l and "shingle#" in l
-            ]
-            assert shingle_joins, (gen.__name__, plan)
-            assert "Broadcast" not in shingle_joins[0], (
-                gen.__name__,
-                shingle_joins[0],
-            )
-    finally:
-        pref.unpersist()
+    for gen in (vcl_candidates, ppjoin_candidates):
+        plan = gen(pref)._jdf.queryExecution().executedPlan().toString()
+        # the OUTERMOST shingle join is the prefix x prefix candidate
+        # self-join; only the self-join is pinned
+        shingle_joins = [
+            l for l in plan.splitlines() if "Join" in l and "shingle#" in l
+        ]
+        assert shingle_joins, (gen.__name__, plan)
+        assert "Broadcast" not in shingle_joins[0], (
+            gen.__name__,
+            shingle_joins[0],
+        )
